@@ -37,8 +37,8 @@ object Graft {
     *    pqCache (the ADC-scored PQ frame q109/q110 both cut)
     *  - lsh: Dedup shingle/sig/cand/pair caches + Curation clusterCache
     *  - simhash: Dedup.simhashCache
-    *  - graph: Curation edge/deg/orient/srcEdge caches (+ the scalar
-    *    node-count memo riding the degree frame)
+    *  - graph: Curation edge/deg/orient/adj/srcEdge caches (+ the
+    *    scalar node-count memo riding the degree frame)
     *  - semdedup: Similarity.semAssignCache
     *  - perceptron: TrainingOps.perceptronScoreCache (q246's trained
     *    margins, read by the ML-evaluation tier)

@@ -51,6 +51,11 @@ object GraftSession {
       // gracefully, if a pathological partition exceeds it.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
         (128 * 1024).toString)
+      // local files through both Hadoop APIs without a forked chmod or
+      // readlink per create, mkdir and rename (sources/LocalFs.scala)
+      .config("spark.hadoop.fs.file.impl", classOf[graft.sources.ForkFreeLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.sources.ForkFreeLocalFs].getName)
 
   def create(master: String = "local[*]", appName: String = "graft"): SparkSession = {
     val spark = builder(master, appName).getOrCreate()

@@ -317,10 +317,12 @@ object Curation {
       //    .partitions) is the right N on any cluster size — and,
       //    unlike defaultParallelism, keeps plan text host-independent
       //    (ADVICE r16).
-      // One pinned u-exchange feeds BOTH the adjacency aggregate and
-      // the first probe side; the aggregate preserves the partitioning,
-      // the alias to v preserves it for the second build side, so the
-      // two hash joins add exactly one more exchange (probe re-keyed v).
+      // Only the probe side shuffles: pinned on u for the first join,
+      // re-keyed on v for the second. Both build sides read the cached
+      // adjacency in place — it was staged hash-partitioned on u at the
+      // same width, so once its cache stage has materialized AQE drops
+      // the initial plan's build-side exchanges (the alias to v keeps
+      // that partitioning for the second join).
       val nPart = s.conf.get("spark.sql.shuffle.partitions").toInt
       val oriPart = orientedCoPurchase(s, dir).repartition(nPart, col("u"))
       val adj = orientedAdjacency(s, dir)
@@ -634,10 +636,13 @@ object Curation {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
   }
 
-  /** Drop the co-purchase edge cache for `s` (deg/orient live in
-    * SessionCaches and are cleared via the registry). Part of
-    * Graft.clearCaches — see the edgeCache scaladoc for why. */
+  /** Drop the co-purchase edge cache and the node-count memo for `s`
+    * (deg/orient/adj live in SessionCaches and are cleared via the
+    * registry). Part of Graft.clearCaches — see the edgeCache scaladoc
+    * for why; the count goes with them so data rewritten at the same
+    * dir never meets a stale 1/n literal or broadcast-gate decision. */
   private[graft] def clearEdgeCache(s: org.apache.spark.sql.SparkSession): Unit = {
+    nodeCountCache.remove(s)
     val per = edgeCache.synchronized(edgeCache.remove(s))
     if (per != null) per.values.foreach { df =>
       try df.unpersist(blocking = false)
@@ -686,10 +691,7 @@ object Curation {
     * reads it twice per execution (both probe build sides), so the
     * collect_list aggregate used to re-run per branch per rep. Total
     * payload ≈ one long per oriented edge — the same order of storage
-    * as the edge caches beside it. (r16 measured this cache at ×10 but
-    * could not isolate its effect under the slot's heap variance; the
-    * r17 controlled-heap A/B — alone, fixed heap, interleaved — is
-    * recorded in OPTIMIZATION_r17.md.) */
+    * as the edge caches beside it. */
   private val adjCache = new Dedup.SessionCache
   private[graft] def orientedAdjacency(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
     adjCache.getOrElseUpdate(s, dir) {
@@ -759,7 +761,8 @@ object Curation {
     * that sizes plans, never data on the driver). Feeds pageRank's
     * join-strategy gate and inlines the rank recurrence's 1/n term as a
     * literal (replacing a per-iteration broadcast-cross-join of the
-    * single-row count). */
+    * single-row count). Dropped with the edge cache by
+    * [[clearEdgeCache]]. */
   private val nodeCountCache =
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,

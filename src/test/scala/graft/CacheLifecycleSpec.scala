@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.storage.StorageLevel
 
 /** Graft.clearCaches contract (SCALE.md §6): drops every session-scoped
@@ -46,6 +50,37 @@ class CacheLifecycleSpec extends SparkSpec {
     assert(leaked.storageLevel.useMemory)
     Graft.clearCaches(spark)
     assert(leaked.storageLevel == StorageLevel.NONE)
+  }
+
+  test("clearCaches drops PageRank's node count: q131 over rewritten data matches a fresh session") {
+    val q131 = SparkEntry.all.find(_.name == "q131_pagerank").get
+    val tmp = Files.createTempDirectory("graft-rewrite")
+    try {
+      Tables.names.foreach { n =>
+        Files.copy(Paths.get(dir, s"$n.parquet"), tmp.resolve(s"$n.parquet"))
+      }
+      val d = tmp.toString
+      def rows(s: SparkSession) = q131.run(s, d).collect().map(_.toString).sorted.toSeq
+      val before = rows(spark)
+      val nBefore = operators.Curation.coPurchaseNodeCount(spark, d)
+      // same dir, new data: the lines of every other part, so the graph
+      // loses about half its nodes
+      val half = tmp.resolve("lineitem-half.parquet")
+      Tables.lineitem(spark, d).where("l_partkey % 2 = 0").write.parquet(half.toString)
+      Files.delete(tmp.resolve("lineitem.parquet"))
+      Files.move(half, tmp.resolve("lineitem.parquet"))
+      Graft.clearCaches(spark)
+      val after = rows(spark)
+      assert(after != before, "the rewrite did not change q131's answer")
+      val fresh = spark.newSession()
+      try {
+        assert(operators.Curation.coPurchaseNodeCount(fresh, d) != nBefore)
+        assert(after == rows(fresh), "q131 served a stale node count")
+      } finally Graft.clearCaches(fresh)
+    } finally {
+      Graft.clearCaches(spark)
+      FileUtils.deleteDirectory(tmp.toFile)
+    }
   }
 
   test("clearCaches is idempotent and safe on an empty cache population") {

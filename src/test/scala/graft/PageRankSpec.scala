@@ -46,6 +46,38 @@ class PageRankSpec extends SparkSpec {
       assert(sparkRanks(und, iters) == refRanks(und, iters), s"iters=$iters")
   }
 
+  test("shuffled-hash rank attachment (node-count gate forced low) is bit-identical to broadcast") {
+    val und = (1L to 5L).map((0L, _)) ++
+      Seq((10L, 11L), (11L, 12L), (10L, 12L)) ++
+      Seq((20L, 21L), (21L, 22L), (22L, 23L))
+    val n = und.flatMap(e => Seq(e._1, e._2)).distinct.size.toLong
+    // with a known node count the gate reads graft.pr.broadcastMaxNodes
+    // (without one, pageRank always broadcasts)
+    def ranksAndPlan(): (Map[Long, Long], String) = {
+      val df = Curation.pageRank(und.toDF("x", "y"), 3, nNodesOpt = Some(n))
+        .select(col("n"), col("pr"))
+      val ranks = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      (ranks, df.queryExecution.executedPlan.toString)
+    }
+    def withGate[A](value: Option[String])(body: => A): A = {
+      val key = "graft.pr.broadcastMaxNodes"
+      def set(v: Option[String]): Unit = v match {
+        case Some(x) => sys.props(key) = x
+        case None    => sys.props -= key
+      }
+      val prev = sys.props.get(key)
+      set(value)
+      try body finally set(prev)
+    }
+    val (broadcastRanks, broadcastPlan) = withGate(None)(ranksAndPlan())
+    val (shuffledRanks, shuffledPlan) = withGate(Some("0"))(ranksAndPlan())
+    assert(broadcastPlan.contains("BroadcastHashJoin"), broadcastPlan)
+    assert(!shuffledPlan.contains("BroadcastHashJoin") &&
+      shuffledPlan.contains("ShuffledHashJoin"), shuffledPlan)
+    assert(shuffledRanks == broadcastRanks)
+    assert(shuffledRanks == refRanks(und, 3))
+  }
+
   test("star hub outranks every leaf; path interior outranks endpoints") {
     val und = (1L to 8L).map((0L, _)) ++ Seq((20L, 21L), (21L, 22L))
     val pr = sparkRanks(und, 3)
