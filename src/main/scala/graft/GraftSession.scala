@@ -51,6 +51,15 @@ object GraftSession {
       // gracefully, if a pathological partition exceeds it.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
         (128 * 1024).toString)
+      // A file-source micro-batch resolves each of its files as a root
+      // path, and above this many paths (stock 32) Spark lists them with a
+      // parallel job of one task per file. In local mode that job runs in
+      // the driver's JVM anyway, so listing on the driver drops only its
+      // scheduling: 40 local paths 259 -> 25 ms, 100 paths 462 -> 25 ms
+      // (4-cpu host, SCALE.md §6 "Per-micro-batch fixed cost"). Lake
+      // tables are one root path each, without subdirectories, so their
+      // listing is unchanged.
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "10000")
       // local files through both Hadoop APIs without a forked chmod or
       // readlink per create, mkdir and rename (sources/LocalFs.scala)
       .config("spark.hadoop.fs.file.impl", classOf[graft.sources.ForkFreeLocalFileSystem].getName)

@@ -65,7 +65,7 @@ object Soak {
 
     // Paced phase (generator.py:219-221 sleep_until analog): replay the
     // same workload on its event-time schedule, compressed to ~20s of
-    // wall clock, through the per-batch-snapshot IP filter, and measure
+    // wall clock, through the snapshot-following IP filter, and measure
     // landed->written latency. AvailableNow above measures THROUGHPUT;
     // this measures end-to-end LATENCY under paced arrival.
     val spanS = hours * 3600
@@ -75,8 +75,7 @@ object Soak {
     val paced = streaming.PacedReplay.replay(
       spark, staged, s"$base/paced-in", s"$base/paced-out", s"$base/paced-ckpt",
       sliceS, speedup,
-      transform = b => ViewsPipeline.filterSuspicious(
-        b, ViewsPipeline.readSnapshotOrEmpty(spark, snap), current_timestamp()))
+      transform = new streaming.SnapshotFollower(snap).filter)
 
     println(
       s"""{"metric":"soak","rows":$nRows,"users":$nUsers,"hours":$hours,""" +

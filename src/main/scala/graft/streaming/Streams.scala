@@ -10,9 +10,10 @@ import org.apache.spark.sql.Row
 /** Structured-Streaming twins of the reference's streaming stages
   * (SURVEY.md §2.8 ST1-ST5): file-source streams stand in for Kinesis;
   * watermarked windowed aggregates stand in for Kinesis Analytics; a
-  * foreachBatch re-read of the suspicious-IP snapshot stands in for the
-  * per-record DynamoDB lookup (fresh per micro-batch, exactly the TTL
-  * snapshot staleness model SURVEY.md §7 flags).
+  * foreachBatch filter against the suspicious-IP snapshot stands in for
+  * the per-record DynamoDB lookup (the snapshot re-read per published
+  * version, its TTL checked per micro-batch: the snapshot staleness model
+  * SURVEY.md §7 flags).
   */
 object Streams {
 
@@ -223,30 +224,31 @@ object Streams {
         col("n_events"))
   }
 
-  /** F1 streaming twin: IP filter with a per-micro-batch snapshot
-    * re-read. Spark caches a static join side for the life of the query;
-    * re-reading inside foreachBatch is what keeps the deny-set fresh
-    * (SURVEY.md §7 "stream-static staleness"). Each batch lands
-    * (overwrite) in its own `batch=<id>` directory with hour partitions
-    * nested inside — the K3 long-term sink, idempotent under batch
-    * replay: a retried batch replaces its partial output instead of
-    * appending duplicates. Readers load `outPath` and prune on the
-    * year/month/day/hour partition columns as before. */
+  /** F1 streaming twin: IP filter against the suspicious-IP snapshot.
+    * Spark caches a static join side for the life of the query; the
+    * query's [[SnapshotFollower]] instead re-reads the snapshot whenever a
+    * new version is published (a file listing per batch detects it), and
+    * checks the TTL against each batch's `current_timestamp()`, so the
+    * deny set stays fresh per micro-batch (SURVEY.md §7 "stream-static
+    * staleness") while a batch over an unchanged snapshot runs one Spark
+    * job, its write. Each batch lands (overwrite) in its own `batch=<id>`
+    * directory with hour partitions nested inside — the K3 long-term
+    * sink, idempotent under batch replay: a retried batch replaces its
+    * partial output instead of appending duplicates. Readers load
+    * `outPath` and prune on the year/month/day/hour partition columns as
+    * before. */
   def filteredSink(events: DataFrame, snapshotPath: String, outPath: String,
-      checkpoint: String): DataStreamWriter[Row] =
+      checkpoint: String): DataStreamWriter[Row] = {
+    val deny = new SnapshotFollower(snapshotPath)
     events.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        val s = batch.sparkSession
-        // existence-checked: a transient read failure must fail (and
-        // retry) the batch, not silently pass bots with an empty deny set
-        val snapshot = ViewsPipeline.readSnapshotOrEmpty(s, snapshotPath)
-        val filtered = ViewsPipeline.filterSuspicious(batch, snapshot, current_timestamp())
-        ViewsPipeline.withPartitionColumns(filtered)
+        ViewsPipeline.withPartitionColumns(deny.filter(batch))
           .write.mode("overwrite").partitionBy("year", "month", "day", "hour")
           .parquet(s"$outPath/batch=$id")
         ()
       }
+  }
 
   /** Streaming heavy-hitter candidates: the Misra-Gries summary (q86's
     * pass 1) as a streaming aggregate. State in the store is the O(m)

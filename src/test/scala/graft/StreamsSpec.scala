@@ -33,7 +33,7 @@ class StreamsSpec extends SparkSpec {
       ViewsPipeline.detectSuspicious(cleaned), current_timestamp(), 24)
       .write.mode("overwrite").parquet(snap)
 
-    // stream with per-batch snapshot re-read into the partitioned sink
+    // stream through the snapshot-following IP filter into the partitioned sink
     val stream = Streams.viewsStream(spark, inDir)
     Streams.runToCompletion(Streams.filteredSink(stream, snap, outDir, ckpt))
 
