@@ -37,8 +37,8 @@ object Graft {
     *    pqCache (the ADC-scored PQ frame q109/q110 both cut)
     *  - lsh: Dedup shingle/sig/cand/pair caches + Curation clusterCache
     *  - simhash: Dedup.simhashCache
-    *  - graph: Curation edge/deg/orient/adj/srcEdge caches (+ the
-    *    scalar node-count memo riding the degree frame)
+    *  - graph: Curation edge/deg/orient/adj/srcEdge caches + the
+    *    scalar nodeCountCache (PageRank's node count)
     *  - semdedup: Similarity.semAssignCache
     *  - perceptron: TrainingOps.perceptronScoreCache (q246's trained
     *    margins, read by the ML-evaluation tier)
@@ -48,8 +48,8 @@ object Graft {
     *    table q168's novelty and q200's datasheet both roll up;
     *    q200 left the simhash family — it never consumed
     *    simhashCache)
-    * (BPE queries share a driver-side merge memo that clearCaches does
-    * not drop, so they need no family.) */
+    *  - bpe: BpeTrainer.cache (the learned merges every encode-side
+    *    query applies) */
   val cacheFamilies: Map[String, Seq[String]] = Map(
     "knn" -> Seq("q109_knn_pq", "q110_knn_pq_rerank", "q31_knn_bruteforce",
       "q34_knn_codegen", "q90_knn_ivf_probe", "q231_matryoshka_recall"),
@@ -65,7 +65,9 @@ object Graft {
     "perceptron" -> Seq("q246_quality_classifier", "q284_roc_auc",
       "q285_reliability", "q286_pr_curve"),
     "bigram" -> Seq("q135_bigram_lm_score", "q248_kneser_ney",
-      "q203_importance_resampling", "q204_perplexity_buckets"))
+      "q203_importance_resampling", "q204_perplexity_buckets"),
+    "bpe" -> Seq("q136_bpe_encode", "q140_bpe_vocab_freq",
+      "q193_token_rate_by_source", "q210_tokenizer_fertility"))
 
   /** Family id of a query — its own name when it belongs to none. */
   private val familyOf: Map[String, String] =
@@ -81,12 +83,13 @@ object Graft {
     (anchor, name)
   }
 
-  /** Unpersist and forget every session-scoped helper cache for `s`,
-    * then sweep any remaining cached relations out of the session's
-    * CacheManager (catches per-run `.cache()` frames a query built and
-    * abandoned — no registered query does this today; the sweep is the
-    * backstop for any future offender). Idempotent and
-    * cheap when nothing is cached; the next consumer rebuilds lazily.
+  /** Drop every [[SessionCache]] value for `s` (frames unpersisted,
+    * scalars and driver-side models forgotten), then sweep any remaining
+    * cached relations out of the session's CacheManager (catches per-run
+    * `.cache()` frames a query built and abandoned — no registered query
+    * does this today; the sweep is the backstop for any future
+    * offender). Idempotent and cheap when nothing is cached; the next
+    * consumer rebuilds lazily.
     *
     * Call between independent units of work that should not share
     * storage budget — Bench and Verify call it at [[cacheFamilies]]
@@ -101,8 +104,7 @@ object Graft {
     * a future multi-session caller who wants per-session scoping must
     * sweep only the relations planned by `s` instead. */
   def clearCaches(s: SparkSession): Unit = {
-    operators.Dedup.SessionCache.clearAll(s)
-    operators.Curation.clearEdgeCache(s)
+    SessionCache.clearAll(s)
     try s.catalog.clearCache()
     catch { case _: Throwable => () } // session may be stopping
     // the SessionCache frames that embedded checkpoints are gone now, so

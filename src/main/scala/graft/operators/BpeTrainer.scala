@@ -140,27 +140,16 @@ object BpeTrainer {
     merges.toSeq
   }
 
-  /** Learned-merge cache, keyed weakly by session then by (dir, k).
-    * The tokenizer model is a training ARTIFACT: q129 trains it, q136
-    * (encode) applies it — an encode call must not re-run the k
-    * training rounds when the model for this corpus already exists in
-    * the session, exactly as a production pipeline persists the merge
-    * table once and ships it to every encode job. Testdata dirs are
-    * immutable per run, so the (dir, k) key cannot serve stale merges. */
-  private val cache =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-        scala.collection.concurrent.TrieMap[(String, Int), Seq[Merge]]])
-  def trainCached(s: org.apache.spark.sql.SparkSession, dir: String, k: Int): Seq[Merge] = {
-    val per = cache.synchronized {
-      var m = cache.get(s)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap[(String, Int), Seq[Merge]]()
-        cache.put(s, m)
-      }
-      m
+  /** Learned merges, memoized per (session, dir, k). The tokenizer
+    * model is a training ARTIFACT that the encode-side queries (q136,
+    * q140, q193, q210: the `bpe` cache family) all apply — an encode call must not re-run the k training rounds when the model
+    * for this corpus already exists in the session, exactly as a
+    * production pipeline persists the merge table once and ships it to
+    * every encode job. [[graft.Graft.clearCaches]] drops it, so a corpus
+    * rewritten at the same dir is trained afresh. */
+  private val cache = new graft.SessionCache[Seq[Merge]]
+  def trainCached(s: org.apache.spark.sql.SparkSession, dir: String, k: Int): Seq[Merge] =
+    cache.getOrElseUpdate(s, s"$dir/$k") {
+      train(graft.Tables.documents(s, dir).select(col("text")), "text", k)
     }
-    per.getOrElseUpdate((dir, k),
-      train(graft.Tables.documents(s, dir).select(col("text")), "text", k))
-  }
 }

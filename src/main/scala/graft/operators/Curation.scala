@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, SessionCache, Tables}
 import graft.QueryDef.q
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -103,7 +103,7 @@ object Curation {
   /** Cluster labels of the verified near-dup graph — shared (cached)
     * between q68's cluster report and q63's near-dup removal stage, so
     * the iterative propagation runs once per (session, dir). */
-  private val clusterCache = new Dedup.SessionCache
+  private val clusterCache = new SessionCache[DataFrame]
   private[graft] def dupClusters(
       s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
     clusterCache.getOrElseUpdate(s, dir)(
@@ -603,59 +603,24 @@ object Curation {
     * iteration — without a reuse point the collect_set aggregation
     * re-evaluates 4×+ (it was 31% of the r9 bench). A persisted DF is
     * the local-mode analog of the 100-TB answer (stage the derived edge
-    * table to storage once, then fan out). Keyed weakly by session so
-    * dead sessions evict; testdata dirs are immutable per run, so the
-    * dir-keyed memo can't serve stale data.
-    *
-    * LIFECYCLE: like every session-keyed helper cache, this assumes ONE
-    * consumer cluster per storage window — nothing here unpersists.
-    * Over a 202-query × 4-rep bench run the accumulated population
-    * (edges + degrees + orientation + neardupPairs + …) overflowed the
-    * 8 GiB storage pool and evicted the very frames the caches exist to
-    * keep (q130's r11 suite median ran 10× its isolated time). The fix
-    * is `Graft.clearCaches(session)` — Bench/Verify call it between
-    * queries, so at any instant storage holds only the current query's
-    * working set. Detection signature + measurement protocol:
-    * SCALE.md §6. */
-  private val edgeCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-        scala.collection.concurrent.TrieMap[String, DataFrame]]())
-  private[graft] def coPurchaseEdges(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    val per = edgeCache.synchronized {
-      var m = edgeCache.get(s)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap[String, DataFrame]()
-        edgeCache.put(s, m)
-      }
-      m
-    }
-    per.getOrElseUpdate(dir,
+    * table to storage once, then fan out). Like every graph-family
+    * memo it is a SessionCache: [[graft.Graft.clearCaches]] unpersists
+    * it at cache-family boundaries (SCALE.md §6), and a stopped
+    * session's entry is dropped with the others. */
+  private val edgeCache = new SessionCache[DataFrame]
+  private[graft] def coPurchaseEdges(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
+    edgeCache.getOrElseUpdate(s, dir) {
       undirectedEdges(Tables.lineitem(s, dir)
           .select(col("l_orderkey").as("gid"), col("l_partkey").as("member")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-  }
-
-  /** Drop the co-purchase edge cache and the node-count memo for `s`
-    * (deg/orient/adj live in SessionCaches and are cleared via the
-    * registry). Part of Graft.clearCaches — see the edgeCache scaladoc
-    * for why; the count goes with them so data rewritten at the same
-    * dir never meets a stale 1/n literal or broadcast-gate decision. */
-  private[graft] def clearEdgeCache(s: org.apache.spark.sql.SparkSession): Unit = {
-    nodeCountCache.remove(s)
-    val per = edgeCache.synchronized(edgeCache.remove(s))
-    if (per != null) per.values.foreach { df =>
-      try df.unpersist(blocking = false)
-      catch { case _: Throwable => () }
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-  }
 
   /** Per-node degree table (n, deg) of the co-purchase graph, persisted
     * once per (session, dir): q130's orientation and q131's PageRank
     * both need it, and each previously rebuilt it from the raw edge
     * list (one extra edge-sized union + agg per query). Node-sized —
     * cheap to keep, saves a full edge pass per consumer. */
-  private val degCache = new Dedup.SessionCache
+  private val degCache = new SessionCache[DataFrame]
   private[graft] def coPurchaseDegrees(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
     degCache.getOrElseUpdate(s, dir) {
       val edges = coPurchaseEdges(s, dir)
@@ -669,7 +634,7 @@ object Curation {
     * O(√m). Persisted once per (session, dir): q130's plan reads it
     * TWICE (adjacency build + the per-edge probe), so without a reuse
     * point the two degree joins re-evaluate per branch. Edge-sized. */
-  private val orientCache = new Dedup.SessionCache
+  private val orientCache = new SessionCache[DataFrame]
   private[graft] def orientedCoPurchase(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
     orientCache.getOrElseUpdate(s, dir) {
       val deg = coPurchaseDegrees(s, dir)
@@ -692,7 +657,7 @@ object Curation {
     * collect_list aggregate used to re-run per branch per rep. Total
     * payload ≈ one long per oriented edge — the same order of storage
     * as the edge caches beside it. */
-  private val adjCache = new Dedup.SessionCache
+  private val adjCache = new SessionCache[DataFrame]
   private[graft] def orientedAdjacency(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
     adjCache.getOrElseUpdate(s, dir) {
       orientedCoPurchase(s, dir)
@@ -735,7 +700,7 @@ object Curation {
     * the next clearCaches boundary): reps reuse one copy, and
     * Graft.clearCaches owns the lifecycle like every other helper
     * frame. */
-  private val srcEdgeCache = new Dedup.SessionCache
+  private val srcEdgeCache = new SessionCache[DataFrame]
   private[graft] def srcStagedCoPurchase(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
     srcEdgeCache.getOrElseUpdate(s, dir) {
       val und = coPurchaseEdges(s, dir)
@@ -761,24 +726,13 @@ object Curation {
     * that sizes plans, never data on the driver). Feeds pageRank's
     * join-strategy gate and inlines the rank recurrence's 1/n term as a
     * literal (replacing a per-iteration broadcast-cross-join of the
-    * single-row count). Dropped with the edge cache by
-    * [[clearEdgeCache]]. */
-  private val nodeCountCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-        scala.collection.concurrent.TrieMap[String, Long]]())
+    * single-row count). Dropped by [[graft.Graft.clearCaches]] with the
+    * frames it was counted from, so data rewritten at the same dir never
+    * meets a stale 1/n literal or broadcast-gate decision. */
+  private val nodeCountCache = new SessionCache[Long]
   private[graft] def coPurchaseNodeCount(
-      s: org.apache.spark.sql.SparkSession, dir: String): Long = {
-    val per = nodeCountCache.synchronized {
-      var m = nodeCountCache.get(s)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap[String, Long]()
-        nodeCountCache.put(s, m)
-      }
-      m
-    }
-    per.getOrElseUpdate(dir, coPurchaseDegrees(s, dir).count())
-  }
+      s: org.apache.spark.sql.SparkSession, dir: String): Long =
+    nodeCountCache.getOrElseUpdate(s, dir)(coPurchaseDegrees(s, dir).count())
 
   /** pr-side broadcast gate for [[pageRank]]: at or below this many
     * nodes the per-iteration rank frame broadcasts (a ≤16 MB hash

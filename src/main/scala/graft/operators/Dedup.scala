@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, SessionCache, Tables}
 import graft.QueryDef.q
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -32,54 +32,6 @@ object Dedup {
   val BandSize = 2   // rows per LSH band => 4 bands, sim threshold ~ (1/4)^(1/2) = 0.5
   val NumBands: Int = NumSeeds / BandSize
 
-  /** Per-session, per-key DataFrame cache, keyed by the session OBJECT
-    * (identity), evicted by a listener on application end. Weak keying
-    * cannot work here: the cached DataFrames strongly reference their
-    * SparkSession (df.queryExecution → session), so a WeakHashMap whose
-    * values are DataFrames keeps its own keys strongly reachable and
-    * never evicts — the leak it was meant to prevent. The listener fires
-    * when the session's SparkContext stops, dropping the entry (and with
-    * it the cached plans and the session reference). A session whose
-    * context is already stopped is never inserted. */
-  private[graft] final class SessionCache {
-    SessionCache.registry.add(this)
-    private val m = new java.util.concurrent.ConcurrentHashMap[
-      SparkSession, scala.collection.mutable.Map[String, DataFrame]]()
-    def getOrElseUpdate(s: SparkSession, key: String)(mk: => DataFrame): DataFrame = {
-      val inner = m.computeIfAbsent(s, { sess =>
-        sess.sparkContext.addSparkListener(
-          new org.apache.spark.scheduler.SparkListener {
-            override def onApplicationEnd(
-                e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-              m.remove(sess)
-          })
-        scala.collection.mutable.Map.empty[String, DataFrame]
-      })
-      inner.synchronized(inner.getOrElseUpdate(key, mk))
-    }
-    /** Unpersist and forget every frame this cache holds for `s`; the
-      * next getOrElseUpdate rebuilds (and re-persists) from scratch. */
-    def clear(s: SparkSession): Unit = {
-      val inner = m.remove(s)
-      if (inner != null) inner.synchronized {
-        inner.values.foreach { df =>
-          try df.unpersist(blocking = false)
-          catch { case _: Throwable => () } // session may be stopping
-        }
-      }
-    }
-  }
-
-  /** Every SessionCache instance in the engine, so Graft.clearCaches can
-    * drop them all without each operator file exporting its own hook.
-    * Instances are object-level vals (bounded, ~10), never per-query. */
-  private[graft] object SessionCache {
-    private val registry =
-      java.util.concurrent.ConcurrentHashMap.newKeySet[SessionCache]()
-    private[graft] def clearAll(s: SparkSession): Unit =
-      registry.forEach(_.clear(s))
-  }
-
   /** (doc_id, shingle): distinct word-3-gram shingles per doc.
     * Guard sequence() against <3-token docs (Spark sequence descends when
     * stop<start). Cached: the LSH candidate self-join and the Jaccard
@@ -96,7 +48,7 @@ object Dedup {
       .select(col("doc_id"), concat_ws(" ", slice(col("w"), col("i"), lit(3))).as("sh"))
       .distinct()
 
-  private val shingleCache = new SessionCache
+  private val shingleCache = new SessionCache[DataFrame]
   private[operators] def shingles(s: SparkSession, dir: String): DataFrame =
     shingleCache.getOrElseUpdate(s, dir) {
       shinglesOf(Tables.documents(s, dir)).cache()
@@ -122,7 +74,7 @@ object Dedup {
       .agg(aggs.head, aggs.tail: _*)
   }
 
-  private val sigCache = new SessionCache
+  private val sigCache = new SessionCache[DataFrame]
   private def signatureWide(s: SparkSession, dir: String): DataFrame =
     sigCache.getOrElseUpdate(s, dir) {
       val aggs = (0 until NumSeeds).map(i =>
@@ -189,7 +141,7 @@ object Dedup {
     * join co-partitioned on the pair key — the same size-gated fallback
     * contract StreamExactSubstr documents for its dictionary. DedupSpec
     * proves the two paths emit identical rows. */
-  private val candCache = new SessionCache
+  private val candCache = new SessionCache[DataFrame]
   private def candidates(s: SparkSession, dir: String): DataFrame =
     candCache.getOrElseUpdate(s, dir) {
       val b = bands(s, dir)
@@ -253,7 +205,7 @@ object Dedup {
     interCache.getOrElseUpdate(s, dir)(
       candIntersectionsFresh(s, dir, CandBroadcastMaxRows).cache())
 
-  private val interCache = new SessionCache
+  private val interCache = new SessionCache[DataFrame]
 
   /** Uncached [[candIntersections]] at an explicit broadcast gate —
     * always a fresh evaluation, for path-independence proofs. */
@@ -279,7 +231,7 @@ object Dedup {
     * like the artifacts it derives from: staged once per (session, dir),
     * reused by every lsh-family member and every rep, dropped at the
     * family boundary. */
-  private val candShCache = new SessionCache
+  private val candShCache = new SessionCache[DataFrame]
   private[operators] def candShingles(s: SparkSession, dir: String): DataFrame =
     candShCache.getOrElseUpdate(s, dir) {
       val cand = candidates(s, dir)
@@ -299,7 +251,7 @@ object Dedup {
     * form the `span8` cache family. (q151/q158's 12-token span tables
     * are NOT shareable with this: q151 needs raw occurrence counts, not
     * the distinct table.) */
-  private val span8Cache = new SessionCache
+  private val span8Cache = new SessionCache[DataFrame]
   private[operators] def span8(s: SparkSession, dir: String): DataFrame =
     span8Cache.getOrElseUpdate(s, dir) {
       graft.Tables.documents(s, dir)
@@ -322,7 +274,7 @@ object Dedup {
     * Cached: the verified pair set is tiny (hundreds of rows at sf0.1)
     * and three operators consume it — recomputing the intersection joins
     * per consumer would triple the dedup-suite cost. */
-  private val pairCache = new SessionCache
+  private val pairCache = new SessionCache[DataFrame]
   private[operators] def neardupPairs(s: SparkSession, dir: String,
       minJaccard: Double = 0.2): DataFrame =
     pairCache.getOrElseUpdate(s, s"$dir#$minJaccard")(
@@ -1164,7 +1116,7 @@ object Dedup {
     * join key at scale; q77 joins on [[simhashSig60]]). Single shuffle
     * on doc_id for the bit aggregate; the 16x bit-position explode is
     * linear. */
-  private val simhashCache = new SessionCache
+  private val simhashCache = new SessionCache[DataFrame]
   private[operators] def simhashSig(s: SparkSession, dir: String): DataFrame =
     simhashCache.getOrElseUpdate(s, dir) {
       val toks = Tables.documents(s, dir)
@@ -1201,7 +1153,7 @@ object Dedup {
     * signature agreement tracks real token overlap instead of sketch
     * saturation. One md5 per distinct token; the 60x bit-position
     * explode and the two aggregates are linear in token count. */
-  private val simhash60Cache = new SessionCache
+  private val simhash60Cache = new SessionCache[DataFrame]
   private[operators] def simhashSig60(s: SparkSession, dir: String): DataFrame =
     simhash60Cache.getOrElseUpdate(s, dir) {
       val toks = Tables.documents(s, dir)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, SessionCache, Tables}
 import graft.QueryDef.q
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -156,7 +156,7 @@ object Similarity {
     * artifact like every other family member; the isolated brute-force
     * cost is measured with SPARK_GRAFT_BENCH_ONLY=q31_knn_bruteforce
     * (which stages nothing else). */
-  private val exactCache = new Dedup.SessionCache
+  private val exactCache = new SessionCache[DataFrame]
   private[operators] def exactTopK(s: SparkSession, dir: String): DataFrame =
     exactCache.getOrElseUpdate(s, dir) {
       sparkTopK(s, dir, sameCell = false).cache()
@@ -192,7 +192,7 @@ object Similarity {
     "array_min(transform(cents, ct -> named_struct(" +
       "'d', sq_dist_long(iv, ct.icv), 'cid', ct.cid)))"
 
-  private val semAssignCache = new Dedup.SessionCache
+  private val semAssignCache = new SessionCache[DataFrame]
   private[operators] def semAssign(s: SparkSession, dir: String): DataFrame =
     semAssignCache.getOrElseUpdate(s, dir) {
       graft.plans.GraftFunctions.register(s)
@@ -219,7 +219,7 @@ object Similarity {
     * both the agreement semi-join and the top_ids aggregate — uncached
     * it would run the codegen scan twice per execution (and re-calling
     * .cache() per run would spam CacheManager warnings). */
-  private val fastCache = new Dedup.SessionCache
+  private val fastCache = new SessionCache[DataFrame]
   private def fastTopK(s: SparkSession, dir: String): DataFrame =
     fastCache.getOrElseUpdate(s, dir) {
       graft.plans.GraftFunctions.register(s)
@@ -1157,7 +1157,7 @@ private[operators] object PQ {
     * (session, sfDir) is the "encode the corpus once, serve every query
     * depth" shape of a production ANN index build; previously each query
     * re-encoded the whole corpus. */
-  private val pqCache = new Dedup.SessionCache
+  private val pqCache = new SessionCache[DataFrame]
   private def adcScored(s: SparkSession, dir: String): DataFrame =
     pqCache.getOrElseUpdate(s, dir) { adcScoredUncached(s, dir).cache() }
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, SessionCache, Tables}
 import graft.QueryDef.q
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -1870,7 +1870,7 @@ object TrainingOps {
     * building execution (the cached frame's lineage references it), so
     * it goes through cacheScopedCheckpoint — released by clearCaches
     * together with the owning entry, the cluster-label precedent. */
-  private val perceptronScoreCache = new Dedup.SessionCache
+  private val perceptronScoreCache = new SessionCache[DataFrame]
   private[graft] def trainedScores(s: SparkSession, dir: String): DataFrame =
     perceptronScoreCache.getOrElseUpdate(s, dir) {
       perceptronScoresStaged(Tables.documents(s, dir), Seq("src1", "src2"), 3,
@@ -2009,7 +2009,7 @@ object TrainingOps {
     * fit many models); the four consumers form the `bigram` cache
     * family (Graft.cacheFamilies), staged in the first member's warm-up
     * and dropped at the family boundary. */
-  private val bigramCache = new Dedup.SessionCache
+  private val bigramCache = new SessionCache[DataFrame]
   private[operators] def docBigrams(s: SparkSession, dir: String): DataFrame =
     bigramCache.getOrElseUpdate(s, dir) {
       Tables.documents(s, dir)
@@ -2045,7 +2045,7 @@ object TrainingOps {
     * key: it is a function of doc_id, so the aggregates are unchanged
     * and each consumer projects its columns — same argument as
     * docBigrams' extra keys.) */
-  private val lmScoreCache = new Dedup.SessionCache
+  private val lmScoreCache = new SessionCache[DataFrame]
   private[graft] def lmScored(s: SparkSession, dir: String): DataFrame =
     lmScoreCache.getOrElseUpdate(s, dir) {
       val db = docBigrams(s, dir)

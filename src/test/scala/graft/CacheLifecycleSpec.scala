@@ -17,15 +17,27 @@ class CacheLifecycleSpec extends SparkSpec {
 
   private val dir = TestSession.sfDir
 
+  private def query(name: String) = SparkEntry.all.find(_.name == name).get
+
   test("clearCaches unpersists memoized frames; consumers rebuild and agree") {
-    val q130 = SparkEntry.all.find(_.name == "q130_triangle_count").get
+    Graft.clearCaches(spark)
+    assert(SessionCache.entries(spark) == 0)
+    val q130 = query("q130_triangle_count")
     val r1 = q130.run(spark, dir).collect().map(_.toString).sorted
+    val graph = SessionCache.entries(spark)
+    assert(graph > 0)
+    query("q131_pagerank").run(spark, dir).collect()
+    assert(SessionCache.entries(spark) == graph + 2,
+      "q131 memoizes its src-staged edges and the scalar node count")
+    query("q136_bpe_encode").run(spark, dir).collect()
+    assert(SessionCache.entries(spark) == graph + 3, "q136 memoizes the learned merges")
     val before = operators.Curation.coPurchaseEdges(spark, dir)
     // memoized: same instance on re-request
     assert(operators.Curation.coPurchaseEdges(spark, dir) eq before)
     assert(before.storageLevel != StorageLevel.NONE)
 
     Graft.clearCaches(spark)
+    assert(SessionCache.entries(spark) == 0, "clearCaches left memoized values behind")
 
     // the old frame no longer occupies storage, and the memo is gone —
     // the next consumer rebuilds (new instance) and re-persists
@@ -52,31 +64,48 @@ class CacheLifecycleSpec extends SparkSpec {
     assert(leaked.storageLevel == StorageLevel.NONE)
   }
 
-  test("clearCaches drops PageRank's node count: q131 over rewritten data matches a fresh session") {
-    val q131 = SparkEntry.all.find(_.name == "q131_pagerank").get
+  /** Same-dir rewrites: (query, table, a predicate that keeps about half
+    * of the table, the dir-keyed memo the query reads). A memo that
+    * outlived clearCaches would answer the new data from the old. */
+  private val rewrites: Seq[(String, String, String, (SparkSession, String) => Any)] = Seq(
+    // the graph loses about half its nodes: PageRank's node count
+    ("q131_pagerank", "lineitem", "l_partkey % 2 = 0",
+      operators.Curation.coPurchaseNodeCount(_, _)),
+    // the first half of the corpus learns a different tenth merge
+    ("q136_bpe_encode", "documents", "doc_id < 250",
+      operators.BpeTrainer.trainCached(_, _, 10)))
+
+  test("clearCaches drops dir-keyed memos: same-dir rewrites match a new session") {
     val tmp = Files.createTempDirectory("graft-rewrite")
     try {
       Tables.names.foreach { n =>
         Files.copy(Paths.get(dir, s"$n.parquet"), tmp.resolve(s"$n.parquet"))
       }
       val d = tmp.toString
-      def rows(s: SparkSession) = q131.run(s, d).collect().map(_.toString).sorted.toSeq
+      def rows(s: SparkSession) = rewrites.map { case (q, _, _, _) =>
+        query(q).run(s, d).collect().map(_.toString).sorted.toSeq
+      }
       val before = rows(spark)
-      val nBefore = operators.Curation.coPurchaseNodeCount(spark, d)
-      // same dir, new data: the lines of every other part, so the graph
-      // loses about half its nodes
-      val half = tmp.resolve("lineitem-half.parquet")
-      Tables.lineitem(spark, d).where("l_partkey % 2 = 0").write.parquet(half.toString)
-      Files.delete(tmp.resolve("lineitem.parquet"))
-      Files.move(half, tmp.resolve("lineitem.parquet"))
+      val memosBefore = rewrites.map(_._4(spark, d))
+      // same dir, new data
+      rewrites.foreach { case (_, t, keep, _) =>
+        val half = tmp.resolve(s"$t-half.parquet")
+        Tables(spark, d, t).where(keep).write.parquet(half.toString)
+        Files.delete(tmp.resolve(s"$t.parquet"))
+        Files.move(half, tmp.resolve(s"$t.parquet"))
+      }
       Graft.clearCaches(spark)
       val after = rows(spark)
-      assert(after != before, "the rewrite did not change q131's answer")
       val fresh = spark.newSession()
-      try {
-        assert(operators.Curation.coPurchaseNodeCount(fresh, d) != nBefore)
-        assert(after == rows(fresh), "q131 served a stale node count")
-      } finally Graft.clearCaches(fresh)
+      val (expected, memosFresh) =
+        try (rows(fresh), rewrites.map(_._4(fresh, d)))
+        finally Graft.clearCaches(fresh)
+      rewrites.indices.foreach { i =>
+        val q = rewrites(i)._1
+        assert(memosFresh(i) != memosBefore(i), s"the rewrite did not change $q's memo")
+        assert(after(i) != before(i), s"the rewrite did not change $q's answer")
+        assert(after(i) == expected(i), s"$q served a memo of the old data")
+      }
     } finally {
       Graft.clearCaches(spark)
       FileUtils.deleteDirectory(tmp.toFile)
