@@ -156,6 +156,14 @@ object Bench {
         }
       })
 
+    // generated classes compiled so far in this JVM (cache misses of
+    // Spark's codegen cache), snapshotted around each query's measured
+    // reps: a warm rep that compiles runs generated code that changes per
+    // execution, or a working set larger than the cache (SCALE.md §6
+    // "Generated-code cache working set")
+    def codegenCompiles(): Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
     // SPARK_GRAFT_BENCH_ONLY=q130_triangle_count,q131_pagerank — restrict
     // to a comma-separated subset for targeted perf iteration; the full
     // run (no filter) is the round artifact.
@@ -190,7 +198,7 @@ object Bench {
     final case class QRes(name: String, sec: Double, secMin: Double,
                           reps: Seq[(Double, Boolean)],
                           spread: Double, err: Option[String], measured: Boolean,
-                          spill: Long, floorMin: Double)
+                          spill: Long, floorMin: Double, compiles: Long)
     var prevFamily: String = null
     val results: Seq[QRes] =
       ordered.map { d =>
@@ -238,6 +246,7 @@ object Bench {
         val warmTimes = (1 to warmups).map(_ => once()).collect { case (t, true) => t }
         err = None // warm-up failures don't gate measurement; measured reps decide
         val spill0 = spillBytes.get()
+        val compiles0 = codegenCompiles()
         val all = scala.collection.mutable.ArrayBuffer.empty[(Double, Boolean)]
         var r = 0
         var failed = false
@@ -268,7 +277,7 @@ object Bench {
           f" min=$secMin%8.2fs" + (if (err.isDefined) " ERR" else ""))
         QRes(d.name, sec, secMin, all.toSeq, spread, err,
           measured = good.nonEmpty, spill = spillBytes.get() - spill0,
-          floorMin = floorMin)
+          floorMin = floorMin, compiles = codegenCompiles() - compiles0)
       }
     // Self-adjudication (VERDICT r13 #3): every offender is re-run
     // ISOLATED at suite end — fresh clearCaches+GC, its own warm-up
@@ -481,6 +490,7 @@ object Bench {
         ",\"sec_isolated\":" + isolated.get(r.name).map(v => fmt(v._1)).getOrElse("null") +
         ",\"iso_mode\":" + isolated.get(r.name).map(v => jstr(v._2)).getOrElse("null") +
         ",\"spill_bytes\":" + r.spill +
+        ",\"codegen_compiles\":" + r.compiles +
         ",\"err\":" + r.err.map(jstr).getOrElse("null") + "}"
     }.mkString("{", ",", "}")
     try {

@@ -149,30 +149,36 @@ object Graft {
   // work; holding the refs makes a missed release VISIBLE as monotone
   // storage growth (StorageHygieneSpec's signature) instead of a
   // GC-timing heisenbug. A stopped session cannot rely on that
-  // discipline, so each session's first registration installs an
+  // discipline, so each session's first registration installs one
   // onApplicationEnd listener that drops the session's queues (the
-  // SessionCache lifecycle, same reasoning).
+  // SessionCache lifecycle, same reasoning). `watched`, not the queues,
+  // records that it is installed: a drain removes the queue, and a
+  // listener per re-created queue would grow the bus by one per release.
   private val execStaged = new java.util.concurrent.ConcurrentHashMap[
     SparkSession, java.util.Queue[RDD[_]]]()
   private val cacheStaged = new java.util.concurrent.ConcurrentHashMap[
     SparkSession, java.util.Queue[RDD[_]]]()
+  private val watched = java.util.concurrent.ConcurrentHashMap.newKeySet[SparkSession]()
+
+  private def watch(s: SparkSession): Unit =
+    if (watched.add(s)) s.sparkContext.addSparkListener(
+      new org.apache.spark.scheduler.SparkListener {
+        override def onApplicationEnd(
+            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
+          execStaged.remove(s)
+          cacheStaged.remove(s)
+          watched.remove(s)
+        }
+      })
 
   private def register(
       m: java.util.concurrent.ConcurrentHashMap[SparkSession, java.util.Queue[RDD[_]]],
       df: DataFrame): DataFrame = {
     df.queryExecution.logical match {
       case l: org.apache.spark.sql.execution.LogicalRDD =>
-        m.computeIfAbsent(df.sparkSession, { sess =>
-          sess.sparkContext.addSparkListener(
-            new org.apache.spark.scheduler.SparkListener {
-              override def onApplicationEnd(
-                  e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-                execStaged.remove(sess)
-                cacheStaged.remove(sess)
-              }
-            })
-          new java.util.concurrent.ConcurrentLinkedQueue[RDD[_]]
-        }).add(l.rdd)
+        watch(df.sparkSession)
+        m.computeIfAbsent(df.sparkSession,
+          _ => new java.util.concurrent.ConcurrentLinkedQueue[RDD[_]]).add(l.rdd)
       // a future Spark that reshapes the checkpoint plan degrades to the
       // old GC-paced freeing; StagedCheckpointSpec pins the match so the
       // degradation cannot land silently

@@ -16,6 +16,26 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
+  /** Capacity of Spark's generated-class cache, one LRU per JVM keyed by
+    * the generated source. Each whole-stage plan compiles its classes
+    * with Janino once per distinct source, then reuses them from this
+    * cache. A cache smaller than the set of classes a workload cycles
+    * through evicts each class just before its next use, so every warm
+    * pass recompiles them, and a stage's sibling tasks wait on the
+    * compile lock. At the stock 100, each warm lake-derived pass (137
+    * distinct classes over 5 queries) recompiled 104 of them; at this
+    * capacity a warm pass compiles none, and the whole run compiles 176.
+    * Sized as the smallest power of two at least 4x the largest working
+    * set that repeats (the cache is split into 4 LRU segments, so a
+    * working set must fit each quarter with room to spare). An entry
+    * holds about 21-39 KB of heap and 4-11 KB of metaspace, so a full
+    * cache of join and aggregate classes costs about 51 MB. SCALE.md §6
+    * "Generated-code cache working set" has the counts and the A/B.
+    *
+    * A static conf: it is read once, when the JVM first generates code,
+    * so it only works from the builder of the JVM's first session. */
+  val CodegenCacheEntries = 1024
+
   def builder(master: String = "local[*]", appName: String = "graft"): SparkSession.Builder =
     SparkSession
       .builder()
@@ -65,6 +85,7 @@ object GraftSession {
       .config("spark.hadoop.fs.file.impl", classOf[graft.sources.ForkFreeLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
         classOf[graft.sources.ForkFreeLocalFs].getName)
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
 
   def create(master: String = "local[*]", appName: String = "graft"): SparkSession = {
     val spark = builder(master, appName).getOrCreate()

@@ -73,10 +73,27 @@ class BenchAdjudicationSpec extends AnyFunSuite {
     assert(Bench.childIsoMedian("/nonexistent.json", "q130_triangle_count").isEmpty)
   }
 
-  test("gitHead resolves this repo's HEAD to a 40-hex sha") {
-    val sha = Bench.gitHead()
-    assert(sha.length == 40 && sha.forall(c => c.isDigit || ('a' to 'f').contains(c)),
-      s"got: $sha")
-    assert(Bench.gitHead("/tmp") == "unknown") // not a checkout
+  test("gitHead reads every checkout layout from fixtures") {
+    val sha = "0123456789abcdef0123456789abcdef01234567"
+    val ref = "refs/heads/main"
+    def checkout(files: (String, String)*): String = {
+      val dir = Files.createTempDirectory("githead")
+      files.foreach { case (path, text) =>
+        val f = dir.resolve(path)
+        Files.createDirectories(f.getParent)
+        Files.writeString(f, text)
+      }
+      dir.toString
+    }
+    assert(Bench.gitHead(checkout(".git/HEAD" -> s"$sha\n")) == sha)
+    assert(Bench.gitHead(checkout(
+      ".git/HEAD" -> s"ref: $ref\n", s".git/$ref" -> s"$sha\n")) == sha)
+    assert(Bench.gitHead(checkout(
+      ".git/HEAD" -> s"ref: $ref\n",
+      ".git/packed-refs" -> (s"# pack-refs with: peeled fully-peeled sorted\n" +
+        s"${"f" * 40} refs/heads/other\n$sha $ref\n"))) == sha)
+    // a worktree or submodule: .git is a file pointing at the real dir
+    assert(Bench.gitHead(checkout(".git" -> "gitdir: /elsewhere/.git/worktrees/w\n")) == "unknown")
+    assert(Bench.gitHead(checkout()) == "unknown")
   }
 }

@@ -17,7 +17,9 @@ import org.apache.spark.sql.functions.col
   *  - cache-scoped checkpoints (embedded under SessionCache entries)
   *    survive the per-rep release and die with clearCaches;
   *  - clusterLabels frees its dead per-round frames eagerly, keeping at
-  *    most the converged frame's blocks alive.
+  *    most the converged frame's blocks alive;
+  *  - the registry's application-end listener is installed once per
+  *    session, not once per checkpoint after each release.
   */
 class StagedCheckpointSpec extends SparkSpec {
   import spark.implicits._
@@ -87,5 +89,17 @@ class StagedCheckpointSpec extends SparkSpec {
     Graft.clearCaches(spark)
     assert((cachedIds -- before).isEmpty,
       "clusterLabels checkpoints survived clearCaches")
+  }
+
+  test("release rounds add at most one listener to the bus") {
+    val sc = spark.sparkContext
+    val before = org.apache.spark.ListenerBusDrain.listeners(sc)
+    for (_ <- 1 to 3) {
+      Graft.stagedCheckpoint(Seq(1, 2, 3).toDF("x"))
+      Graft.cacheScopedCheckpoint(Seq(4, 5).toDF("x"))
+      Graft.clearCaches(spark) // drains both queues
+    }
+    val added = org.apache.spark.ListenerBusDrain.listeners(sc) - before
+    assert(added <= 1, s"$added listeners added by 3 checkpoint/release rounds")
   }
 }
