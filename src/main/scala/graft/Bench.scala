@@ -15,7 +15,7 @@ import org.apache.spark.sql.SparkSession
   * bench_detail.json for audit. Suspect queries — high spread OR a
   * median 3x past the previous run's / this run's own floor, plus the
   * suite's top-5 expensive medians — are re-run isolated at suite end,
-  * by default in a FRESH FORKED JVM (the long-lived suite JVM's heap
+  * in a FRESH FORKED JVM (the long-lived suite JVM's heap
   * debris pollutes even the re-measurement: sf10 read q130 643 s
   * in-suite, 292 s same-JVM-isolated, 109 s fresh-JVM), and carry
   * `sec_isolated` + `iso_mode` in-artifact (see the adjudication
@@ -140,16 +140,23 @@ object Bench {
       d.run(spark, sfDir).write.format("noop").mode("overwrite").save()
 
     // spill accounting (SCALE.md §8): sum of memory+disk bytes spilled
-    // across task ends, snapshotted around each query's measured reps.
-    // Listener delivery is async, so attribution is best-effort (a task
-    // finishing after the snapshot lands on the next query) — at bench
+    // across task ends, plus the jobs started and tasks ended, each
+    // snapshotted around a query's measured reps. Listener delivery is
+    // async, so attribution is best-effort (a job or task event
+    // delivered after the snapshot lands on the next query) — at bench
     // scale the drift is a rounding error, and a query that flips from
     // in-memory to spill paths at a bigger SF shows up unmistakably.
     val spillBytes = new java.util.concurrent.atomic.AtomicLong(0)
+    val jobsStarted = new java.util.concurrent.atomic.AtomicLong(0)
+    val tasksEnded = new java.util.concurrent.atomic.AtomicLong(0)
     spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobsStarted.incrementAndGet()
         override def onTaskEnd(
             e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
+          tasksEnded.incrementAndGet()
           val m = e.taskMetrics
           if (m != null)
             spillBytes.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
@@ -197,8 +204,10 @@ object Bench {
     // another JVM ran recently, the min almost never does.
     final case class QRes(name: String, sec: Double, secMin: Double,
                           reps: Seq[(Double, Boolean)],
+                          warmupReps: Seq[(Double, Boolean)],
                           spread: Double, err: Option[String], measured: Boolean,
-                          spill: Long, floorMin: Double, compiles: Long)
+                          spill: Long, jobs: Long, tasks: Long,
+                          floorMin: Double, compiles: Long)
     var prevFamily: String = null
     val results: Seq[QRes] =
       ordered.map { d =>
@@ -240,12 +249,16 @@ object Bench {
           Graft.releaseStagedCheckpoints(spark)
           (t, ok)
         }
-        // warm-up wall times are kept: the min over warmups+measured is
-        // the query's observed noise floor THIS run, one of the two
-        // uniformly-slow adjudication references (VERDICT r14 #1)
-        val warmTimes = (1 to warmups).map(_ => once()).collect { case (t, true) => t }
+        // warm-up reps are kept: they land in the detail file as the
+        // query's cold cost, and the min over warmups+measured is the
+        // query's observed noise floor THIS run, one of the two
+        // uniformly-slow adjudication references
+        val warm = (1 to warmups).map(_ => once())
+        val warmTimes = warm.collect { case (t, true) => t }
         err = None // warm-up failures don't gate measurement; measured reps decide
         val spill0 = spillBytes.get()
+        val jobs0 = jobsStarted.get()
+        val tasks0 = tasksEnded.get()
         val compiles0 = codegenCompiles()
         val all = scala.collection.mutable.ArrayBuffer.empty[(Double, Boolean)]
         var r = 0
@@ -275,8 +288,9 @@ object Bench {
         // diagnose). One line per query, outside the timed region.
         System.err.println(f"[bench] ${d.name}%-34s med=$sec%8.2fs" +
           f" min=$secMin%8.2fs" + (if (err.isDefined) " ERR" else ""))
-        QRes(d.name, sec, secMin, all.toSeq, spread, err,
+        QRes(d.name, sec, secMin, all.toSeq, warm, spread, err,
           measured = good.nonEmpty, spill = spillBytes.get() - spill0,
+          jobs = jobsStarted.get() - jobs0, tasks = tasksEnded.get() - tasks0,
           floorMin = floorMin, compiles = codegenCompiles() - compiles0)
       }
     // Self-adjudication (VERDICT r13 #3): every offender is re-run
@@ -333,10 +347,10 @@ object Bench {
           .sortBy(-_.sec).take(5).map(_.name -> "top")
         base ++ top
       }
-    // Fork isolation (default ON, SPARK_GRAFT_BENCH_FORK_ISO=0 reverts):
-    // the in-process suite-end re-run shares the long-lived JVM, and at
-    // sweep scale that JVM's heap debris pollutes the re-measurement
-    // itself — the sf10 full suite read q130 at 643 s in-suite, 292 s
+    // Fork isolation: every offender is re-measured in a fresh JVM. An
+    // in-process re-run would share the long-lived JVM, and at sweep
+    // scale that JVM's heap debris pollutes the re-measurement itself —
+    // the sf10 full suite read q130 at 643 s in-suite, 292 s
     // same-JVM-isolated, 109 s in a FRESH JVM (the number the manual
     // SCALE.md family-isolation protocol always had to recover by hand).
     // A fork replays the single offender through the identical Bench
@@ -344,9 +358,9 @@ object Bench {
     // in the child's own warm-up) in a fresh process; its detail file
     // lands in a temp path so the parent's is never clobbered, its
     // stdout is discarded so the parent's contract line stays the only
-    // one. Any fork failure falls back to the in-process measurement —
-    // the artifact records which mode produced each number.
-    val forkIso = !sys.env.get("SPARK_GRAFT_BENCH_FORK_ISO").contains("0")
+    // one. The in-process re-run is only the fallback for a fork that
+    // fails or hangs — the artifact records which mode produced each
+    // number.
     def runForkIso(name: String, inSuiteSec: Double): Option[Double] =
       try {
         import scala.jdk.CollectionConverters._
@@ -389,8 +403,7 @@ object Bench {
       .flatMap(r => ordered.find(_.name == r.name))
       .map { d =>
         val inSuite = results.find(_.name == d.name).map(_.sec).getOrElse(0.0)
-        val forked = if (forkIso) runForkIso(d.name, inSuite) else None
-        forked match {
+        runForkIso(d.name, inSuite) match {
           case Some(sec) => d.name -> (sec, "fork")
           case None =>
             Graft.clearCaches(spark)
@@ -475,21 +488,25 @@ object Bench {
       sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", "bench_detail.json")
     val line =
       s"""{"metric":"total","value":${fmt(total)},"value_min":${fmt(totalMin)},"unit":"sec","excluded":$nExcluded,"n_queries":${results.size},"queries":$qs,"queries_omitted":$nOmitted,"detail":${jstr(detailPath)},"err":$errs,"spread_gt2":$noisy,"sec_isolated":$isoJson,"spill_mb":$spilled,"head":"$head","sf":"$sfDir"}"""
+    // each rep carries its own ok flag so an auditor can tell exactly
+    // which recorded wall time was the failing one
+    def repsJson(rs: Seq[(Double, Boolean)]): String = rs.map { case (t, ok) =>
+      "{\"sec\":" + fmt(t) + ",\"ok\":" + ok + "}"
+    }.mkString("[", ",", "]")
     val detail = results.map { r =>
-      // each rep carries its own ok flag so an auditor can tell exactly
-      // which recorded wall time was the failing one
       jstr(r.name) + ":{\"sec\":" + fmt(r.sec) +
         ",\"sec_min\":" + fmt(r.secMin) +
         ",\"measured\":" + r.measured +
-        ",\"reps\":" + r.reps.map { case (t, ok) =>
-          "{\"sec\":" + fmt(t) + ",\"ok\":" + ok + "}"
-        }.mkString("[", ",", "]") +
+        ",\"reps\":" + repsJson(r.reps) +
+        ",\"warmup_reps\":" + repsJson(r.warmupReps) +
         ",\"spread\":" + fmt(r.spread) +
         ",\"floor_min\":" + fmt(r.floorMin) +
         ",\"adjudicated\":" + adjReasons.get(r.name).map(jstr).getOrElse("null") +
         ",\"sec_isolated\":" + isolated.get(r.name).map(v => fmt(v._1)).getOrElse("null") +
         ",\"iso_mode\":" + isolated.get(r.name).map(v => jstr(v._2)).getOrElse("null") +
         ",\"spill_bytes\":" + r.spill +
+        ",\"jobs\":" + r.jobs +
+        ",\"tasks\":" + r.tasks +
         ",\"codegen_compiles\":" + r.compiles +
         ",\"err\":" + r.err.map(jstr).getOrElse("null") + "}"
     }.mkString("{", ",", "}")

@@ -121,8 +121,10 @@ object DistributedRank {
     * Operating requirement: each range partition's rows are buffered by
     * its local-running-sum window task, so `numShufflePartitions` must
     * keep rows-per-partition × concurrent tasks inside execution
-    * memory (PrefixSumBench uses 256 partitions for 1e8 rows on an 8 GB
-    * heap; 32 starves the pool). This is the standard spill-aware
+    * memory: pick the partition count so each partition holds a few
+    * hundred thousand rows (1e8 rows on an 8 GB heap needs 256, about
+    * 390k rows each; at 32 every concurrent task buffers about 3M rows
+    * and starves the pool). This is the standard spill-aware
     * shuffle-partition sizing, not a limit peculiar to this operator. */
   def withGlobalPrefixSum(df: DataFrame, ord: Seq[Column], value: Column,
       cumCol: String, totalCol: String): DataFrame = {

@@ -1,12 +1,11 @@
 package graft
 
 /** Small-n co-residency proof for the concurrent streaming soak
-  * harness (VERDICT r15 #5): six kernels sharing one paced source in
-  * one session, every kernel draining every row, every kernel's peak
-  * state-store rows inside its STREAMING.md bound. The full-size run
-  * (ConcurrentSoak main, 1e7 rows) records its numbers in
-  * STREAMING.md; this keeps the harness and the bounds continuously
-  * green in the suite.
+  * harness (`ConcurrentSoak`, beside this spec): six kernels sharing
+  * one paced source in one session, every kernel draining every row,
+  * every kernel's peak state-store rows inside its STREAMING.md bound.
+  * STREAMING.md records the same harness at 1e7 rows; this keeps the
+  * harness and the bounds continuously green in the suite.
   */
 class ConcurrentSoakSpec extends SparkSpec {
 

@@ -290,4 +290,18 @@ class ScaleOpsSpec extends SparkSpec {
       assert(d2 < wm / 10, "random labels should not separate")
     }
   }
+
+
+  test("q153 estimates 10^6 sequential user ids within 30%") {
+    // sequential keys are what q153's (h^2 + h) mod p pass is for: their
+    // base-131 fold never wraps the modulus. m = 64 registers give about
+    // 13% standard error, so 30% is a 2.3 sigma gate.
+    val dir = java.nio.file.Files.createTempDirectory("graft-q153").toString
+    spark.range(1000000L).select(col("id").as("user_id"), timestamp_seconds(col("id")).as("ts"))
+      .write.parquet(s"$dir/events.parquet")
+    val rows = byName("q153_hll_cardinality").run(spark, dir).collect()
+    val (est, exact) = (rows.head.getLong(2), rows.head.getLong(3))
+    assert(rows.length == 64 && exact == 1000000L)
+    assert(est > 700000L && est < 1300000L, s"estimate $est")
+  }
 }

@@ -148,4 +148,19 @@ class TemporalJoinsSpec extends SparkSpec {
     val wins = qe.optimizedPlan.collect { case w: LWindow => w }
     assert(wins.nonEmpty && wins.forall(_.partitionSpec.nonEmpty))
   }
+
+
+  test("the range kernel keeps each interval's start point and sheds its end point") {
+    // points at 0, 1000, ..., 39000 and intervals [s, s + 1000) that
+    // start on one point and end on the next: each half-open interval
+    // counts exactly its start point (closed would count 2, open 0,
+    // (s, e] would leave the last interval empty)
+    val ivs = spark.range(40).select(col("id"),
+      (col("id") * 1000).as("s_us"), (col("id") * 1000 + 1000).as("e_us"))
+    val r = operators.TemporalJoins.rangeCountKernel(ivs,
+        spark.range(40).select((col("id") * 1000).as("t_us")))
+      .agg(count(lit(1)), min(col("n_points")), max(col("n_points")))
+      .collect()(0)
+    assert((0 until 3).map(r.getLong) == Seq(40L, 1L, 1L))
+  }
 }

@@ -560,4 +560,20 @@ class TrainingOpsSpec extends SparkSpec {
     assert(rows == expected,
       "positional-index phrase counts diverge from the direct scan")
   }
+
+
+  test("q81 keeps exactly 10% of en and 50% elsewhere over whole hash cycles") {
+    // within one language the gate's hash (31 * doc_id + 7) % 1000 takes
+    // each residue with a given last digit once per 100 ids, so over
+    // whole 1000-id cycles the kept fractions are exact
+    val dir = java.nio.file.Files.createTempDirectory("graft-q81").toString
+    spark.range(20000).select(col("id").as("doc_id"), lit("x").as("text"),
+        when(col("id") % 10 < 7, "en").when(col("id") % 10 < 9, "fr")
+          .otherwise("de").as("lang"), lit("s").as("source"), lit(1L).as("n_chars"))
+      .write.parquet(s"$dir/documents.parquet")
+    val rates = byName("q81_stratified_sample").run(spark, dir).collect()
+      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    assert(rates == Map("en" -> ((14000L, 1400L)), "fr" -> ((4000L, 2000L)),
+      "de" -> ((2000L, 1000L))), s"q81 rates $rates")
+  }
 }
