@@ -114,46 +114,37 @@ object Graft {
   }
 
   // ------------------------------------------------------------------
-  // Staged-checkpoint registry (VERDICT r13 #1).
+  // Staged-checkpoint registry.
   //
   // `Dataset.localCheckpoint(eager=true)` persists the materialized rows
-  // as storage blocks whose ONLY release path, absent help, is
+  // as storage blocks whose only release path, absent help, is
   // GC-then-ContextCleaner: `Dataset.unpersist` does not reach them, and
   // the blocks stay pinned until the JVM happens to collect the dropped
-  // RDD reference. In a long multi-query run that debris is not inert —
-  // r13's driver bench measured q145 at 1.15/6.08/4.55 s across reps
-  // (0.59 s isolated) because each rep's abandoned checkpoint slices
-  // accumulated until the storage pool evicted the very family caches
-  // the reps depended on. System.gc() at family boundaries (the r12 fix)
-  // frees debris BETWEEN families but not between a family's own reps.
+  // RDD reference. In a long multi-query run that debris evicts the
+  // family caches the next reps depend on (SCALE.md §6, "Staged
+  // checkpoints and the fixpoint loop").
   //
-  // The registry makes release deterministic: [[stagedCheckpoint]] is
-  // the engine-wide replacement for per-execution `.localCheckpoint()`
-  // calls — it checkpoints eagerly and records the underlying
-  // checkpointed RDD so [[releaseStagedCheckpoints]] (called by Bench
-  // after every rep, by Verify after every query, and by [[clearCaches]])
-  // can unpersist the blocks the moment the execution that staged them
-  // has consumed them. A checkpoint whose frame OUTLIVES the execution —
-  // i.e. one embedded under a SessionCache entry, today only the
-  // cluster-label propagation's converged frame — must instead go
-  // through [[cacheScopedCheckpoint]], which defers release to
-  // [[clearCaches]] (the owning cache's own lifetime): releasing it
+  // The registry makes release deterministic: [[stagedCheckpoint]]
+  // checkpoints eagerly and records the checkpointed RDD, so
+  // [[releaseStagedCheckpoints]] (called by Bench after every rep, by
+  // Verify after every query, and by [[clearCaches]]) unpersists the
+  // blocks once the execution that staged them has consumed them. A
+  // checkpoint whose frame outlives the execution, i.e. one embedded
+  // under a SessionCache entry, goes through [[cacheScopedCheckpoint]]
+  // instead, which defers release to [[clearCaches]]: releasing it
   // per-rep would truncate the lineage under a live cached plan, and an
   // eviction-triggered recompute would then throw "checkpoint block not
   // found".
-  // Strong references BY DESIGN: deterministic release beats GC-paced
-  // freeing (the whole point of the registry). The contract for any
-  // driver other than Bench/Verify — e.g. a long-running ingestion loop
-  // calling stagedCheckpoint consumers per batch — is to call
-  // [[releaseStagedCheckpoints]] (or [[clearCaches]]) between units of
-  // work; holding the refs makes a missed release VISIBLE as monotone
-  // storage growth (StorageHygieneSpec's signature) instead of a
+  // Strong references by design: a driver other than Bench/Verify (say
+  // a long-running ingestion loop) calls [[releaseStagedCheckpoints]]
+  // or [[clearCaches]] between units of work, and a missed release
+  // shows as monotone storage growth (StorageHygieneSpec) instead of a
   // GC-timing heisenbug. A stopped session cannot rely on that
   // discipline, so each session's first registration installs one
-  // onApplicationEnd listener that drops the session's queues (the
-  // SessionCache lifecycle, same reasoning). `watched`, not the queues,
-  // records that it is installed: a drain removes the queue, and a
-  // listener per re-created queue would grow the bus by one per release.
+  // onApplicationEnd listener that drops the session's queues.
+  // `watched`, not the queues, records that it is installed: a drain
+  // removes the queue, and a listener per re-created queue would grow
+  // the bus by one per release.
   private val execStaged = new java.util.concurrent.ConcurrentHashMap[
     SparkSession, java.util.Queue[RDD[_]]]()
   private val cacheStaged = new java.util.concurrent.ConcurrentHashMap[
@@ -201,10 +192,10 @@ object Graft {
   private[graft] def cacheScopedCheckpoint(df: DataFrame): DataFrame =
     register(cacheStaged, df.localCheckpoint(true))
 
-  /** Eagerly free ONE checkpointed frame's storage blocks, for loops
-    * that can prove a round's frame dead before any registry boundary
-    * (cluster-label propagation). Harmless on non-checkpoint frames and
-    * on frames a registry later re-unpersists. The caller owns the
+  /** Eagerly free ONE checkpointed frame's storage blocks before any
+    * registry boundary. Its per-round caller is [[iterate]], which frees
+    * round k-1 once round k is staged. Harmless on non-checkpoint frames
+    * and on frames a registry later re-unpersists. The caller owns the
     * proof: the frame must never be read again (its lineage is
     * truncated, so a recompute would throw). */
   private[graft] def releaseCheckpoint(df: DataFrame): Unit =
@@ -216,6 +207,44 @@ object Graft {
         }
       case _ => ()
     }
+
+  /** The one fixpoint loop of the operator layer. Round k is
+    * `step(round k-1)`, round 0 is `init`, and the loop owns `init`:
+    * it is released after round 1 if it is a checkpoint. Only the
+    * rounds a later round or the convergence test reads are staged
+    * (through `stage`), and round k-1 is released as soon as round k
+    * is staged, so at most one round's blocks stay alive.
+    *
+    * Fixed-round loop (`converged = None`): rounds 1..n-1 are staged
+    * and round n is returned unstaged, a lazy plan over round n-1, so
+    * plan guards still see the last round's operators.
+    *
+    * Convergence loop: every round is staged, and the first round for
+    * which `converged` holds is returned. A loop that has not converged
+    * after `maxRounds` throws: a silent cap would return plausible but
+    * wrong state. */
+  private[graft] def iterate(name: String, init: DataFrame, maxRounds: Int,
+      stage: DataFrame => DataFrame = stagedCheckpoint,
+      converged: Option[DataFrame => Boolean] = None)(
+      step: DataFrame => DataFrame): DataFrame = {
+    require(maxRounds >= 1, s"$name: maxRounds must be at least 1")
+    // round k is staged eagerly, so round k-1 is dead once it returns
+    def advance(prev: DataFrame): DataFrame =
+      try stage(step(prev)) finally releaseCheckpoint(prev)
+    converged match {
+      case None => step((1 until maxRounds).foldLeft(init)((s, _) => advance(s)))
+      case Some(done) =>
+        // lazy: round k is staged only once round k-1 failed the test
+        Iterator.iterate(init)(advance).slice(1, maxRounds + 1).zipWithIndex
+          .find { case (s, _) => done(s) } match {
+          case Some((s, k)) =>
+            System.err.println(s"[$name] converged after ${k + 1} rounds")
+            s
+          case None => throw new IllegalStateException(
+            s"$name did not converge within $maxRounds rounds")
+        }
+    }
+  }
 
   /** Number of exec-scoped frames currently staged for `s` (spec hook). */
   private[graft] def stagedCount(s: SparkSession): Int = {

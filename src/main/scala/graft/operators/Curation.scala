@@ -49,9 +49,9 @@ object Curation {
 
   /** Connected components of an undirected pair graph via iterative
     * min-label propagation — O(diameter) rounds, each one join + one
-    * aggregate, lineage cut per round with localCheckpoint; this is the
-    * shape that scales where a recursive CTE (the DuckDB oracle) or
-    * union-find on the driver cannot. Input: (doc_a, doc_b) pairs;
+    * aggregate, lineage cut per round by [[graft.Graft.iterate]]; this
+    * is the shape that scales where a recursive CTE (the DuckDB oracle)
+    * or union-find on the driver cannot. Input: (doc_a, doc_b) pairs;
     * output: (doc_id, cluster_id = component min doc_id).
     *
     * The one driver-side action before the loop is a count() of the
@@ -60,44 +60,32 @@ object Curation {
   private[graft] def clusterLabels(pairs: DataFrame): DataFrame = {
     val p = pairs.select(col("doc_a"), col("doc_b"))
     val graphParts = graphPartsFor(2L * p.count())
-    // Every checkpoint in the propagation is CACHE-scoped (the converged
-    // frame is embedded in [[dupClusters]]' SessionCache entry, so its
-    // blocks must live exactly as long as that entry — clearCaches owns
-    // the release); dead rounds are additionally freed EAGERLY below the
-    // moment the convergence check stops reading them, instead of
-    // waiting for a GC to reach the dropped reference (the r13 storage-
-    // churn class, VERDICT r13 #1).
+    // Every checkpoint is cache-scoped: the converged frame is embedded
+    // in [[dupClusters]]' SessionCache entry, so its blocks live exactly
+    // as long as that entry and clearCaches owns the release.
     val edges = graft.Graft.cacheScopedCheckpoint(p
       .union(p.select(col("doc_b"), col("doc_a")))
       .toDF("src", "dst")
       .repartition(graphParts, col("src")))
-    var labels = graft.Graft.cacheScopedCheckpoint(
-      edges.select(col("src").as("doc_id")).distinct()
-        .withColumn("label", col("doc_id"))
-        .repartition(graphParts, col("doc_id")))
-    var changed = true
-    var iter = 0
-    while (changed && iter < 50) {
-      val prop = edges.join(labels, col("src") === col("doc_id"))
-        .groupBy(col("dst")).agg(min(col("label")).as("nlabel"))
-      val next = graft.Graft.cacheScopedCheckpoint(
+    val init = edges.select(col("src").as("doc_id")).distinct()
+      .withColumn("label", col("doc_id"))
+    // labels only decrease, so `changed` (a strictly smaller neighbour
+    // label) is exactly "this round moved the label", and convergence
+    // reads the staged round instead of joining it to the previous one
+    val fixpoint =
+      try graft.Graft.iterate("clusterLabels", init, maxRounds = 50,
+          stage = graft.Graft.cacheScopedCheckpoint,
+          converged = Some(_.filter(col("changed")).limit(1).count() == 0)) { labels =>
+        val prop = edges.join(labels, col("src") === col("doc_id"))
+          .groupBy(col("dst")).agg(min(col("label")).as("nlabel"))
         labels.join(prop, col("doc_id") === col("dst"), "left")
           .select(col("doc_id"),
-            least(col("label"), coalesce(col("nlabel"), col("label"))).as("label"))
-          .repartition(graphParts, col("doc_id")))
-      changed = next.join(labels.withColumnRenamed("label", "old"), "doc_id")
-        .filter(col("label") =!= col("old")).limit(1).count() > 0
-      graft.Graft.releaseCheckpoint(labels) // prior round: now provably dead
-      labels = next
-      iter += 1
-    }
-    graft.Graft.releaseCheckpoint(edges) // loop done: edge blocks dead
-    // a silent cap would return plausible-but-wrong cluster ids; a
-    // >50-diameter dup chain must fail loudly instead
-    if (changed) throw new IllegalStateException(
-      s"label propagation did not converge within $iter rounds")
-    System.err.println(s"[clusterLabels] converged after $iter rounds")
-    labels.select(col("doc_id"), col("label").as("cluster_id"))
+            least(col("label"), coalesce(col("nlabel"), col("label"))).as("label"),
+            (col("nlabel") < col("label")).as("changed"))
+          .repartition(graphParts, col("doc_id"))
+      }
+      finally graft.Graft.releaseCheckpoint(edges) // loop done: edge blocks dead
+    fixpoint.select(col("doc_id"), col("label").as("cluster_id"))
   }
 
   /** Cluster labels of the verified near-dup graph — shared (cached)
@@ -396,7 +384,7 @@ object Curation {
       pageRank(coPurchaseEdges(s, dir), iters = 3,
           degOpt = Some(coPurchaseDegrees(s, dir)),
           stagedOpt = Some(srcStagedCoPurchase(s, dir)),
-          nNodesOpt = Some(coPurchaseNodeCount(s, dir)))
+          nNodes = coPurchaseNodeCount(s, dir))
         .orderBy(col("pr").desc, col("n")).limit(20)
         .select(col("n").as("node"), col("pr").as("pr_scaled"))
     },
@@ -748,7 +736,7 @@ object Curation {
 
   /** Fixed-point PageRank (damping 0.85, scale S = 1e12, floor divides
     * throughout so results are bit-identical across engines) over an
-    * undirected edge list (x, y); returns (n, deg, nn, pr). The scale
+    * undirected edge list (x, y); returns (n, deg, pr). The scale
     * contract of each unrolled iteration: the EDGE table (the only
     * corpus-sized frame) is never sorted, never broadcast and never
     * re-shuffled — it streams through its staged src partitioning; the
@@ -766,14 +754,12 @@ object Curation {
     * [[srcStagedCoPurchase]]) to amortize the union across iterations
     * AND executions; without it the directed list is derived inline,
     * unpersisted — correct, and the right shape for one-shot callers
-    * like the spec's closed-form graphs. Pass `nNodesOpt` (the
-    * session-memoized [[coPurchaseNodeCount]]) to inline the 1/n term
-    * as a literal; without it the single-row count rides along as a
-    * broadcast cross join exactly as before. */
-  private[graft] def pageRank(und: DataFrame, iters: Int,
+    * like the spec's closed-form graphs. `nNodes` (for q131 the
+    * session-memoized [[coPurchaseNodeCount]]) picks the rank-side join
+    * and inlines the 1/n term as a literal. */
+  private[graft] def pageRank(und: DataFrame, iters: Int, nNodes: Long,
       degOpt: Option[DataFrame] = None,
-      stagedOpt: Option[DataFrame] = None,
-      nNodesOpt: Option[Long] = None): DataFrame = {
+      stagedOpt: Option[DataFrame] = None): DataFrame = {
     val S = 1000000000000L
     val e = stagedOpt.getOrElse(
       und.select(col("x").as("src"), col("y").as("dst"))
@@ -785,48 +771,33 @@ object Curation {
       .getOrElse(e.groupBy(col("src")).agg(count(lit(1)).as("deg")))
     // rank-side attachment: broadcast while the node count provably
     // fits, shuffled-hash (build = the node-sized rank frame) past it.
-    // Callers without a known count are the spec's closed-form graphs —
-    // broadcast is always right there.
-    val prBroadcasts = nNodesOpt.forall(_ <= prBroadcastMaxNodes)
     def prSide(c: DataFrame): DataFrame =
-      if (prBroadcasts) broadcast(c) else c.hint("shuffle_hash")
-    // the 1/n terms: plan-time literals when the caller supplied the
-    // memoized node count (Long floor division ≡ SQL DIV on these
-    // non-negative operands — both truncate toward zero), else the
-    // single-row broadcast ride-along. Identical arithmetic either way:
-    // only where the scalar comes from changes.
+      if (nNodes <= prBroadcastMaxNodes) broadcast(c) else c.hint("shuffle_hash")
+    // the 1/n terms as plan-time literals (Long floor division ≡ SQL DIV
+    // on these non-negative operands — both truncate toward zero).
     // max(n, 1): a literal divisor is CONSTANT-FOLDED, so an empty
     // graph (n = 0) would throw DIVIDE_BY_ZERO at plan time even
-    // though no row ever evaluates it (the column form only divided
-    // lazily). With zero nodes every frame below is empty, so the
-    // clamped divisor is unobservable; for n >= 1 it is exact.
-    val nnLit = nNodesOpt.map(n => s"CAST(${math.max(n, 1L)} AS BIGINT)")
-    def attachNn(df: DataFrame): DataFrame = nnLit match {
-      case Some(l) => df.withColumn("nn", expr(l))
-      case None    => df.crossJoin(broadcast(deg.agg(count(lit(1)).as("nn"))))
-    }
-    val pr0Expr = nnLit.map(l => expr(s"${S}L DIV $l"))
-      .getOrElse(expr(s"${S}L DIV nn"))
-    val iterExpr = nnLit
-      .map(l => expr(s"(15 * ${S}L) DIV (100 * $l) + (85 * sc) DIV 100"))
-      .getOrElse(expr(s"(15 * ${S}L) DIV (100 * nn) + (85 * sc) DIV 100"))
-    var pr = attachNn(deg.select(col("src").as("n"), col("deg")))
-      .select(col("n"), col("deg"), col("nn"), pr0Expr.as("pr"))
-    for (_ <- 1 to iters) {
+    // though no row ever evaluates it. With zero nodes every frame
+    // below is empty, so the clamped divisor is unobservable; for
+    // n >= 1 it is exact.
+    val nn = s"CAST(${math.max(nNodes, 1L)} AS BIGINT)"
+    val pr0 = deg.select(col("src").as("n"), col("deg"),
+      expr(s"${S}L DIV $nn").as("pr"))
+    (1 to iters).foldLeft(pr0) { (pr, _) =>
       val contrib = e
         .join(prSide(pr.select(col("n").as("src"), expr("pr DIV deg").as("c"))),
           Seq("src"))
         .groupBy(col("dst")).agg(sum(col("c")).as("sc"))
-      pr = attachNn(deg.select(col("src").as("n"), col("deg"))
-          // node-sized ⋈ node-sized, both already hash-partitioned on n
-          // (the persisted degree aggregate and the contrib aggregate):
-          // shuffled-hash instead of the default sort-merge so neither
-          // node frame sorts
-          .join(contrib.select(col("dst").as("n"), col("sc")).hint("shuffle_hash"),
-            Seq("n")))
-        .select(col("n"), col("deg"), col("nn"), iterExpr.as("pr"))
+      deg.select(col("src").as("n"), col("deg"))
+        // node-sized ⋈ node-sized, both already hash-partitioned on n
+        // (the persisted degree aggregate and the contrib aggregate):
+        // shuffled-hash instead of the default sort-merge so neither
+        // node frame sorts
+        .join(contrib.select(col("dst").as("n"), col("sc")).hint("shuffle_hash"),
+          Seq("n"))
+        .select(col("n"), col("deg"),
+          expr(s"(15 * ${S}L) DIV (100 * $nn) + (85 * sc) DIV 100").as("pr"))
     }
-    pr
   }
 
   /** Distinct 5-word shingles of a (doc_id, text) frame — q92's

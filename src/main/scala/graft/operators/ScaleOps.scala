@@ -519,8 +519,8 @@ object ScaleOps {
         |transform over the summed array. Two tiny shuffles total.
         |Output: (cid, n_members, dim, cval), 256 rows.""".stripMargin,
       kmeansOracleSql(iters = 2)) { (s, dir) =>
-      val (cents, _) = lloyd(s, dir, iters = 2)
-      cents.select(col("cid"), col("n").as("n_members"),
+      lloyd(kmeansPoints(s, dir), iters = 2)
+        .select(col("cid"), col("n").as("n_members"),
           posexplode(col("c")).as(Seq("dim", "cval")))
         .select(col("cid"), col("n_members"),
           col("dim").cast("bigint").as("dim"), col("cval"))
@@ -539,9 +539,11 @@ object ScaleOps {
         |and the distance folds scan-side (zip_with aggregate); one
         |k-group shuffle ends it. Output: 4 rows.""".stripMargin,
       kmeansSseOracleSql(iters = 2)) { (s, dir) =>
-      val (cents, assigned) = lloyd(s, dir, iters = 2)
+      // the final assignment feeds both the last update and the inertia
+      val e = kmeansPoints(s, dir)
+      val assigned = graft.Graft.stagedCheckpoint(assign(e, lloyd(e, iters = 1)))
       assigned
-        .join(broadcast(cents.select(col("cid"), col("c"))), Seq("cid"))
+        .join(broadcast(update(assigned).select(col("cid"), col("c"))), Seq("cid"))
         .select(col("cid"), expr(
           """aggregate(zip_with(vm, c, (a, b) -> (a - b) * (a - b)),
             |          CAST(0 AS BIGINT), (acc, x) -> acc + x)""".stripMargin).as("d2"))
@@ -758,21 +760,18 @@ object ScaleOps {
         .union(upper.select(col("j").as("i"), col("i").as("j"), col("g")))
         .union(diag)
         .transform(graft.Graft.stagedCheckpoint)
-      var v = diag.select(col("i").as("j"), lit(1000L).cast("decimal(38,0)").as("v"))
-      for (_ <- 1 to 3) {
-        // staged per round: w feeds BOTH the renorm max and the next
-        // iterate, and unstaged the round-k plan nested round-k-1
-        // twice over (2^rounds leaf evaluations — 58 Exchanges in the
-        // r15 plan). The checkpoint is a dim-row frame (64 rows), so
-        // staging is ~free and the plan is linear in rounds.
+      // the state is the 64-row iterate v; w is read twice per round
+      // (renorm max and next iterate) and shares one exchange
+      val v0 = gram.select(col("i").as("j")).distinct()
+        .select(col("j"), lit(1000L).cast("decimal(38,0)").as("v"))
+      val v = graft.Graft.iterate("power iteration", v0, maxRounds = 3) { v =>
         val w = gram.join(v, Seq("j"))
           .groupBy(col("i"))
           .agg(sum(col("g").cast("decimal(38,0)") * col("v")).cast("decimal(38,0)").as("w"))
-          .transform(graft.Graft.stagedCheckpoint)
         val mx = w.agg(
           greatest(max(abs(col("w"))), lit(1).cast("decimal(38,0)"))
             .cast("decimal(38,0)").as("mx"))
-        v = w.crossJoin(broadcast(mx))
+        w.crossJoin(broadcast(mx))
           .select(col("i").as("j"),
             expr("CAST((1000 * w + 1001 * mx) DIV mx - 1001 AS DECIMAL(38,0))").as("v"))
       }
@@ -1049,52 +1048,41 @@ object ScaleOps {
     }
   )
 
-  /** Shared Lloyd trainer for q143/q144: `iters` rounds of broadcast-
-    * codebook scan-side assignment + vec_sum centroid update over the
-    * shifted fixed-point embeddings. Returns (final centroids with
-    * member counts, the final-round assignment the update used). */
-  private def lloyd(s: org.apache.spark.sql.SparkSession, dir: String, iters: Int)
-      : (DataFrame, DataFrame) = {
+  /** The shifted fixed-point embeddings (vec_id, vm) q143/q144 cluster. */
+  private def kmeansPoints(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     graft.plans.GraftFunctions.register(s)
-    val e = Tables.embeddings(s, dir)
+    Tables.embeddings(s, dir)
       .withColumn("vm", expr(
         s"transform(${quant("embedding")}, x -> CAST(x * 10000 AS BIGINT) + 10000)"))
       .select(col("vec_id"), col("vm"))
-    var cents = e.filter(col("vec_id") < 4)
+  }
+
+  /** Lloyd assignment: every point's (dist, cid)-nearest centroid, with
+    * the k centroids collapsed to one broadcast codebook row. */
+  private def assign(e: DataFrame, cents: DataFrame): DataFrame = {
+    val cb = cents.agg(collect_list(struct(col("cid"), col("c"))).as("cb"))
+    e.crossJoin(broadcast(cb))
+      .withColumn("cid", expr(
+        """(array_min(transform(cb, cc -> struct(
+          |  aggregate(zip_with(vm, cc.c, (a, b) -> (a - b) * (a - b)),
+          |            CAST(0 AS BIGINT), (acc, x) -> acc + x) AS dist,
+          |  cc.cid AS cid)))).cid""".stripMargin))
+      .select(col("vec_id"), col("vm"), col("cid"))
+  }
+
+  /** Lloyd update: per-cluster vec_sum mean with member counts (cid, c, n). */
+  private def update(assigned: DataFrame): DataFrame =
+    assigned.groupBy(col("cid"))
+      .agg(call_function("vec_sum", col("vm")).as("sv"), count(lit(1)).as("n"))
+      .select(col("cid"), expr("transform(sv, x -> x DIV n)").as("c"), col("n"))
+
+  /** Centroids (cid, c, n) after `iters` Lloyd rounds from seeds
+    * vec_id 0..3. The loop-carried state is the k centroid rows, so
+    * only those are staged; the last round stays a lazy plan. */
+  private def lloyd(e: DataFrame, iters: Int): DataFrame = {
+    val seeds = e.filter(col("vec_id") < 4)
       .select(col("vec_id").as("cid"), col("vm").as("c"), lit(0L).as("n"))
-    var assigned: DataFrame = null
-    for (_ <- 1 to iters) {
-      val cb = cents.agg(collect_list(struct(col("cid"), col("c"))).as("cb"))
-      // staged per round: the UNSTAGED loop nested each round's plan
-      // under the next (cents_k reads assigned_k reads cents_{k-1}...),
-      // and consumers touching both returns (q144 reads cents AND
-      // assigned) re-evaluated the whole chain once per reference —
-      // doubling per iteration. The checkpoint is corpus-row-sized
-      // per round and dies with the execution (Bench frees it per
-      // rep); at 100 TB this is "materialize the assignment each
-      // sweep", which is what an iterative trainer does anyway.
-      val prev = assigned
-      assigned = e.crossJoin(broadcast(cb))
-        .withColumn("cid", expr(
-          """(array_min(transform(cb, cc -> struct(
-            |  aggregate(zip_with(vm, cc.c, (a, b) -> (a - b) * (a - b)),
-            |            CAST(0 AS BIGINT), (acc, x) -> acc + x) AS dist,
-            |  cc.cid AS cid)))).cid""".stripMargin))
-        .select(col("vec_id"), col("vm"), col("cid"))
-        .transform(graft.Graft.stagedCheckpoint)
-      // the new round's checkpoint is EAGER, so by here round k-1's
-      // frame is provably dead (this round's materialization was its
-      // last reader) — free it now instead of pinning every round's
-      // corpus-row-sized blocks until rep end (ADVICE r16: linear
-      // storage growth in iters, the staged-registry eviction class).
-      // The registry's own rep-end release re-unpersists harmlessly.
-      if (prev != null) graft.Graft.releaseCheckpoint(prev)
-      cents = assigned.groupBy(col("cid"))
-        .agg(call_function("vec_sum", col("vm")).as("sv"),
-          count(lit(1)).as("n"))
-        .select(col("cid"), expr("transform(sv, x -> x DIV n)").as("c"), col("n"))
-    }
-    (cents, assigned)
+    graft.Graft.iterate("lloyd", seeds, maxRounds = iters)(c => update(assign(e, c)))
   }
 
   /** Shared WITH-body for the k-means oracles: fixed-point shifted

@@ -33,7 +33,8 @@ class PageRankSpec extends SparkSpec {
   }
 
   private def sparkRanks(und: Seq[(Long, Long)], iters: Int): Map[Long, Long] =
-    Curation.pageRank(und.toDF("x", "y"), iters)
+    Curation.pageRank(und.toDF("x", "y"), iters,
+        nNodes = und.flatMap(e => Seq(e._1, e._2)).distinct.size.toLong)
       .select(col("n"), col("pr"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
@@ -51,10 +52,9 @@ class PageRankSpec extends SparkSpec {
       Seq((10L, 11L), (11L, 12L), (10L, 12L)) ++
       Seq((20L, 21L), (21L, 22L), (22L, 23L))
     val n = und.flatMap(e => Seq(e._1, e._2)).distinct.size.toLong
-    // with a known node count the gate reads graft.pr.broadcastMaxNodes
-    // (without one, pageRank always broadcasts)
+    // the node count is compared against graft.pr.broadcastMaxNodes
     def ranksAndPlan(): (Map[Long, Long], String) = {
-      val df = Curation.pageRank(und.toDF("x", "y"), 3, nNodesOpt = Some(n))
+      val df = Curation.pageRank(und.toDF("x", "y"), 3, nNodes = n)
         .select(col("n"), col("pr"))
       val ranks = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       (ranks, df.queryExecution.executedPlan.toString)

@@ -3,11 +3,10 @@ package graft
 import graft.operators.Curation
 import org.apache.spark.sql.functions.col
 
-/** Staged-checkpoint registry contract (VERDICT r13 #1): per-execution
-  * eager localCheckpoints must be releasable DETERMINISTICALLY — the
-  * r13 driver bench measured q145 at up to 8x its isolated time because
-  * each rep's abandoned checkpoint blocks survived (GC-paced freeing)
-  * until they evicted the family's own shared caches. These tests pin:
+/** Staged-checkpoint registry contract: per-execution eager
+  * localCheckpoints must be releasable deterministically, because
+  * abandoned checkpoint blocks survive (GC-paced freeing) until they
+  * evict the family's own shared caches (SCALE.md §6). These tests pin:
   *
   *  - the LogicalRDD plan-shape match inside Graft.stagedCheckpoint —
   *    if a Spark upgrade reshapes Dataset.localCheckpoint's result, the
@@ -16,8 +15,11 @@ import org.apache.spark.sql.functions.col
   *  - release actually evicts the storage blocks (not just the refs);
   *  - cache-scoped checkpoints (embedded under SessionCache entries)
   *    survive the per-rep release and die with clearCaches;
-  *  - clusterLabels frees its dead per-round frames eagerly, keeping at
-  *    most the converged frame's blocks alive;
+  *  - Graft.iterate frees each dead round eagerly, keeping at most the
+  *    last round's blocks alive (clusterLabels' converged frame, or the
+  *    last round of a loop that fails loudly at its round cap);
+  *  - a fixed-round loop stages only its loop-carried state: q143's
+  *    staged rounds hold the k = 4 centroid rows, never the assignment;
   *  - the registry's application-end listener is installed once per
   *    session, not once per checkpoint after each release.
   */
@@ -89,6 +91,33 @@ class StagedCheckpointSpec extends SparkSpec {
     Graft.clearCaches(spark)
     assert((cachedIds -- before).isEmpty,
       "clusterLabels checkpoints survived clearCaches")
+    // a loop that never converges frees its dead rounds the same way and
+    // fails loudly at its cap, naming itself and the round count
+    val err = intercept[IllegalStateException](
+      Graft.iterate("spin", spark.range(0, 1000).toDF("x"), maxRounds = 3,
+          stage = Graft.cacheScopedCheckpoint, converged = Some(_ => false))(
+        _.select((col("x") + 1).as("x"))))
+    assert(err.getMessage.contains("spin") && err.getMessage.contains("3 rounds"),
+      err.getMessage)
+    val spun = (cachedIds -- before).size
+    assert(spun <= 2, s"$spun checkpoint RDDs still cached after 3 rounds — dead rounds leaked")
+    Graft.clearCaches(spark)
+    assert((cachedIds -- before).isEmpty, "iterate's rounds survived clearCaches")
+  }
+
+  test("q143 stages only the k centroid rows, never a corpus-sized assignment") {
+    Graft.clearCaches(spark)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val q143 = SparkEntry.all.find(_.name == "q143_kmeans_lloyd").get
+    q143.run(spark, TestSession.sfDir)
+    val rows = sc.getPersistentRDDs.toMap.collect {
+      case (id, rdd) if !before(id) => id -> rdd.count()
+    }
+    assert(rows.nonEmpty, "q143 staged no round")
+    assert(rows.values.forall(_ <= 4),
+      s"q143 left checkpoints larger than its 4 centroids persisted: $rows")
+    Graft.releaseStagedCheckpoints(spark)
   }
 
   test("release rounds add at most one listener to the bus") {
