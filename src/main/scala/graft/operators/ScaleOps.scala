@@ -539,7 +539,7 @@ object ScaleOps {
         |and the distance folds scan-side (zip_with aggregate); one
         |k-group shuffle ends it. Output: 4 rows.""".stripMargin,
       kmeansSseOracleSql(iters = 2)) { (s, dir) =>
-      // the final assignment feeds both the last update and the inertia
+      // round 2's assignment feeds both its update and the inertia
       val e = kmeansPoints(s, dir)
       val assigned = graft.Graft.stagedCheckpoint(assign(e, lloyd(e, iters = 1)))
       assigned
@@ -762,7 +762,7 @@ object ScaleOps {
         .transform(graft.Graft.stagedCheckpoint)
       // the state is the 64-row iterate v; w is read twice per round
       // (renorm max and next iterate) and shares one exchange
-      val v0 = gram.select(col("i").as("j")).distinct()
+      val v0 = gram.filter(col("i") === col("j"))
         .select(col("j"), lit(1000L).cast("decimal(38,0)").as("v"))
       val v = graft.Graft.iterate("power iteration", v0, maxRounds = 3) { v =>
         val w = gram.join(v, Seq("j"))

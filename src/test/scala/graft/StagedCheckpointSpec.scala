@@ -36,7 +36,7 @@ class StagedCheckpointSpec extends SparkSpec {
     val n0 = Graft.stagedCount(spark)
     val df = Graft.stagedCheckpoint(Seq(1, 2, 3).toDF("x"))
     // the LogicalRDD match fired — a miss here means the registry is
-    // silently inert and the r13 churn class is back
+    // silently inert and abandoned checkpoint blocks pile up again
     assert(Graft.stagedCount(spark) == n0 + 1,
       "stagedCheckpoint did not register: LogicalRDD plan match failed")
     assert(df.collect().map(_.getInt(0)).sorted.sameElements(Array(1, 2, 3)))
@@ -78,8 +78,8 @@ class StagedCheckpointSpec extends SparkSpec {
     Graft.clearCaches(spark)
     val before = cachedIds
     // chain 0-1-...-12: diameter forces many propagation rounds, each
-    // of which checkpoints a labels frame that must die when the next
-    // round's convergence check stops reading it
+    // of which checkpoints a labels frame that must die once the next
+    // round is staged
     val pairs = (0L until 12L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     val labels = Curation.clusterLabels(pairs)
     assert(labels.select(col("cluster_id")).distinct().count() == 1)
