@@ -57,6 +57,16 @@ object Bench {
     } catch { case _: Throwable => "unknown" }
   }
 
+  /** JSON string literal of `s`: escapes backslash, quote and ALL
+    * control chars (< 0x20) — a tab or CR in a query's SQL would
+    * otherwise make a reader's json.load fail. */
+  private[graft] def jstr(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
+    case '\r' => "\\r"; case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   /** Previous full-run per-query medians, for the uniformly-slow
     * adjudication trigger (VERDICT r14 #1): parsed from the committed
     * bench_detail.json at HEAD (the prior round's full run), or from
@@ -420,12 +430,6 @@ object Bench {
             d.name -> (if (good.nonEmpty) median(good) else -1.0, "inproc")
         }
       }.toMap
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case '\r' => "\\r"; case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // The harness captures only the last ~2000 chars of stdout and parses
     // the JSON line out of that window; with 77 queries the full-name map
     // is >2x the window and the line can never parse (BENCH_r01/r02 both

@@ -43,28 +43,16 @@ object Verify {
       // letting 240+ queries' debris pile into one storage pool
       Graft.releaseStagedCheckpoints(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
       .filter { case (k, _) => only.isEmpty || only(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Bench.jstr(k)}: ${Bench.jstr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // registry git SHA beside the dump (VERDICT r14 #7): meta.json is a
     // SEPARATE file — a key inside oracle_sql.json would read as a query
     // name to the driver's iteration
     val head = Bench.gitHead()
     Files.writeString(Paths.get(s"$outDir/meta.json"),
-      s"""{"head":${q(head)},"sf":${q(sfDir)}}""")
+      s"""{"head":${Bench.jstr(head)},"sf":${Bench.jstr(sfDir)}}""")
     System.err.println(s"[verify] head $head")
     spark.stop()
   }

@@ -60,36 +60,47 @@ object Dedup {
       |FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
       |     unnest(range(1, greatest(len(w) - 1, 1))) AS t(i)""".stripMargin
 
+  /** The seeded minhash rule, as SQL over a shingle expression `sh`:
+    * md5(sh || ':seed'). A doc's minhash for a seed is the min of it
+    * over the doc's shingles — aggregated here, row-local in
+    * [[graft.streaming.StreamMinHash]]. */
+  private[graft] def seedHashSql(sh: String, seed: Int): String =
+    s"md5(concat($sh, ':$seed'))"
+
+  /** The LSH band-key rule: md5 of band `b`'s sorted minhashes, `mh(i)`
+    * being the SQL of seed i's minhash. The sort keeps the key
+    * order-independent (matches the oracle's list_sort-over-groups). */
+  private[graft] def bandKeySql(b: Int)(mh: Int => String): String = {
+    val ms = (b * BandSize until (b + 1) * BandSize).map(mh).mkString(", ")
+    s"md5(array_join(array_sort(array($ms)), ','))"
+  }
+
   /** Wide per-doc minhash signature: one row per doc, one min-agg column
     * per seed. This is the scale-friendly shape: no seed-explode (8x row
     * blowup avoided), a single shuffle on doc_id, and all 8 mins combine
-    * map-side in one pass. Cached — signatures feed q27, bands and the
-    * Jaccard verify. */
-  /** Wide signature of an arbitrary (doc_id, text) frame (see
-    * [[shinglesOf]] on why this composes incrementally). */
-  private[graft] def signatureWideOf(docs: DataFrame): DataFrame = {
-    val aggs = (0 until NumSeeds).map(i =>
-      min(md5(concat(col("sh"), lit(s":$i")))).as(s"mh$i"))
-    shinglesOf(docs).groupBy(col("doc_id"))
-      .agg(aggs.head, aggs.tail: _*)
+    * map-side in one pass. */
+  private def signatureAgg(shingleRows: DataFrame): DataFrame = {
+    val aggs = (0 until NumSeeds).map(i => min(expr(seedHashSql("sh", i))).as(s"mh$i"))
+    shingleRows.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
   }
 
+  /** Wide signature of an arbitrary (doc_id, text) frame (see
+    * [[shinglesOf]] on why this composes incrementally). */
+  private[graft] def signatureWideOf(docs: DataFrame): DataFrame =
+    signatureAgg(shinglesOf(docs))
+
+  /** Cached — signatures feed q27, bands and the Jaccard verify. */
   private val sigCache = new SessionCache[DataFrame]
   private def signatureWide(s: SparkSession, dir: String): DataFrame =
     sigCache.getOrElseUpdate(s, dir) {
-      val aggs = (0 until NumSeeds).map(i =>
-        min(md5(concat(col("sh"), lit(s":$i")))).as(s"mh$i"))
-      shingles(s, dir).groupBy(col("doc_id"))
-        .agg(aggs.head, aggs.tail: _*)
-        .cache()
+      signatureAgg(shingles(s, dir)).cache()
     }
 
   /** Band-key columns (bk0..bkN) appended to a wide signature — the
-    * row-local LSH keys, same expression the dir-based [[bands]] uses. */
+    * row-local LSH keys, same rule the dir-based [[bands]] uses. */
   private[graft] def withBandKeys(sigWide: DataFrame): DataFrame =
     (0 until NumBands).foldLeft(sigWide) { (d, b) =>
-      val ms = (b * BandSize until (b + 1) * BandSize).map(i => s"mh$i").mkString(", ")
-      d.withColumn(s"bk$b", expr(s"md5(array_join(array_sort(array($ms)), ','))"))
+      d.withColumn(s"bk$b", expr(bandKeySql(b)(i => s"mh$i")))
     }
 
   /** Row view (doc_id, seed, mh) of the wide signature — the
@@ -105,16 +116,12 @@ object Dedup {
        |FROM ($shinglesSql), unnest(range(0, $NumSeeds)) AS s(seed)
        |GROUP BY doc_id, seed""".stripMargin
 
-  /** LSH band keys: (doc_id, band, band_key = md5 of the band's sorted
-    * minhashes). Derived from the wide signature with NO extra shuffle:
-    * each band key is a row-local expression; the sort inside a band
-    * keeps the key order-independent (matches the oracle's
-    * list_sort-over-groups). */
+  /** LSH band keys: (doc_id, band, band_key = [[bandKeySql]]). Derived
+    * from the wide signature with NO extra shuffle: each band key is a
+    * row-local expression. */
   private def bands(s: SparkSession, dir: String): DataFrame = {
-    val bandCols = (0 until NumBands).map { b =>
-      val ms = (b * BandSize until (b + 1) * BandSize).map(i => s"mh$i").mkString(", ")
-      s"${b}, md5(array_join(array_sort(array($ms)), ','))"
-    }.mkString(", ")
+    val bandCols = (0 until NumBands)
+      .map(b => s"$b, ${bandKeySql(b)(i => s"mh$i")}").mkString(", ")
     signatureWide(s, dir)
       .selectExpr("doc_id", s"stack($NumBands, $bandCols) AS (band, band_key)")
   }

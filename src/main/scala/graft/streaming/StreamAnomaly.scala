@@ -1,15 +1,11 @@
 package graft.streaming
 
-import java.sql.Timestamp
-
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming rolling z-score anomaly detection — the streaming twin of
   * [[graft.operators.EventsOps.rollingAnomaly]] (q149), built on
-  * flatMapGroupsWithState with EVENT-TIME timeouts (the StreamFunnel
-  * state discipline).
+  * flatMapGroupsWithState with EVENT-TIME timeouts.
   *
   * Per-key state is two TIME-bounded buffers, never the history:
   *
@@ -30,21 +26,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * the watermark passes all input the output EQUALS the batch result
   * row for row (proved by replay in StreamAnomalySpec).
   *
-  * Late events below the finalized horizon are dropped (ST3 policy);
-  * `idleTtlMs` expires idle keys' state (ST4), bounding state on an
-  * unbounded key space.
+  * The buffer, its (ts, event_id) release order, late drop (ST3) and
+  * idle-TTL eviction (ST4) are [[WatermarkFold]]'s `orderedScan`.
   */
 object StreamAnomaly {
-
-  final case class Ev(user_id: Long, ts: Timestamp, event_id: Long, cents: Long)
-
-  /** (epoch micros, event_id, cents) — all the state ever buffers. */
-  final case class P(tUs: Long, id: Long, cents: Long)
-
-  final case class AnomState(
-      frame: Vector[P],
-      finalizedWmMs: Long,
-      pending: Vector[P])
 
   final case class AnomRow(
       event_id: Long, user_id: Long, n_frame: Long,
@@ -56,71 +41,40 @@ object StreamAnomaly {
       idleTtlMs: Option[Long] = None): Dataset[AnomRow] = {
     val s = events.sparkSession
     import s.implicits._
-    val ttlMs = idleTtlMs
-    require(ttlMs.forall(_ > 0), "idleTtlMs must be positive")
 
-    events
-      .withWatermark("ts", watermark)
-      .select(col("user_id"), col("ts"), col("event_id"),
-        (col("value").cast("decimal(18,2)") * 100).cast("long").as("cents"))
-      .as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[AnomState, AnomRow](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key, it, state: GroupState[AnomState]) =>
-          var st = state.getOption.getOrElse(
-            AnomState(Vector.empty, Long.MinValue, Vector.empty))
-          val wmMs = state.getCurrentWatermarkMs()
-          val incoming = it.flatMap { e =>
-            val tMs = e.ts.getTime
-            if (tMs < st.finalizedWmMs) None // late beyond finalized: drop
-            else Some(P(tMs * 1000L + (e.ts.getNanos / 1000L) % 1000L,
-              e.event_id, e.cents))
-          }.toVector
-
-          if (state.hasTimedOut && incoming.isEmpty && st.pending.isEmpty) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val all = st.pending ++ incoming
-            val (readyUnsorted, still) = all.partition(_.tUs / 1000L < wmMs)
-            val ready = readyUnsorted.sortBy(p => (p.tUs, p.id))
-            var frame = st.frame
-            val out = Vector.newBuilder[AnomRow]
-            var i = 0
-            while (i < ready.size) {
-              // peers share one timestamp: all are judged against the
-              // strictly-earlier frame, then enter it together
-              var j = i
-              while (j < ready.size && ready(j).tUs == ready(i).tUs) j += 1
-              val t = ready(i).tUs
-              frame = frame.filter(q => q.tUs >= t - frameUs)
-              val n = frame.size.toLong
-              var sSum = 0L
-              var qSum = 0L
-              frame.foreach { q => sSum += q.cents; qSum += q.cents * q.cents }
-              var p = i
-              while (p < j) {
-                val x = ready(p).cents
-                val dev2 = (n * x - sSum) * (n * x - sSum)
-                val thr = 9L * (n * qSum - sSum * sSum)
-                out += AnomRow(ready(p).id, key, n, dev2, thr,
-                  if (n >= minPrior && dev2 > thr) 1 else 0)
-                p += 1
-              }
-              frame = frame ++ ready.slice(i, j)
-              i = j
-            }
-            st = AnomState(frame, math.max(st.finalizedWmMs, wmMs), still)
-            state.update(st)
-            if (still.nonEmpty) {
-              state.setTimeoutTimestamp(
-                math.max(still.map(_.tUs / 1000L).min + 1L, wmMs + 1L))
-            } else ttlMs.foreach { t =>
-              if (wmMs > Long.MinValue) state.setTimeoutTimestamp(wmMs + t)
-            }
-            out.result().iterator
-          }
+    WatermarkFold.orderedScan(
+        events.withWatermark("ts", watermark)
+          .select(col("user_id"), col("ts"), col("event_id"),
+            (col("value").cast("decimal(18,2)") * 100).cast("long").as("p")) // cents
+          .as[WatermarkFold.UserEvent[Long]],
+        Vector.empty[WatermarkFold.Buffered[Long]], idleTtlMs) { (key, frame0, ready) =>
+      var frame = frame0
+      val out = Vector.newBuilder[AnomRow]
+      var i = 0
+      while (i < ready.size) {
+        // peers share one timestamp: all are judged against the
+        // strictly-earlier frame, then enter it together
+        var j = i
+        while (j < ready.size && ready(j).tUs == ready(i).tUs) j += 1
+        val t = ready(i).tUs
+        frame = frame.filter(q => q.tUs >= t - frameUs)
+        val n = frame.size.toLong
+        var sSum = 0L
+        var qSum = 0L
+        frame.foreach { q => sSum += q.p; qSum += q.p * q.p }
+        var p = i
+        while (p < j) {
+          val x = ready(p).p
+          val dev2 = (n * x - sSum) * (n * x - sSum)
+          val thr = 9L * (n * qSum - sSum * sSum)
+          out += AnomRow(ready(p).id, key, n, dev2, thr,
+            if (n >= minPrior && dev2 > thr) 1 else 0)
+          p += 1
+        }
+        frame = frame ++ ready.slice(i, j)
+        i = j
       }
+      (frame, out.result())
+    }
   }
 }

@@ -1,10 +1,6 @@
 package graft.streaming
 
-import java.sql.Timestamp
-
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming CUSUM changepoint chart — the streaming twin of
   * [[graft.operators.EventsOps.cusumChart]] (q227), the 14th stream ≡
@@ -22,97 +18,39 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * stream ≡ batch comparison here closes the triangle: recurrence ≡
   * closed form ≡ SQL windows.
   *
-  * Hour lifecycle is [[StreamEwma]]'s discipline verbatim: an hour
-  * finalizes when the watermark passes its end, finalization walks
-  * forward zero-filling gap hours (batch's spine semantics), never
-  * past the newest observed hour; late events below the finalized
-  * horizon drop (ST3); `idleTtlMs` expires idle keys (ST4). Types
+  * The hour lifecycle is [[WatermarkFold]]'s `hourChart`: an hour
+  * finalizes when the watermark passes its end, gap hours ZERO-FILL
+  * (batch's spine semantics), never past the newest observed hour;
+  * late drop (ST3) and idle-TTL eviction (ST4) are WatermarkFold's. Types
   * without a trained μ are dropped — the chart has no reference to
   * judge them against, and inventing one online would diverge from
   * the batch artifact.
   */
 object StreamCusum {
 
-  final case class Ev(event_type: String, ts: Timestamp)
-
-  /** pending: hour → count for hours not yet closed by the watermark;
-    * pre/mn: the prefix sum of the excess series and min(0, running
-    * min of prefixes) — all the state the recurrence needs. */
-  final case class CusumState(
-      lastFinalized: Option[Long],
-      pending: Map[Long, Long],
-      pre: Long,
-      mn: Long)
-
   final case class CusumRow(
       event_type: String, epoch_hour: Long, cnt: Long,
       cusum_milli: Long, thresh_milli: Long, alarm: Int)
 
-  private val HourMs = 3600000L
-
+  /** Per-type state is (pre, mn): the prefix sum of the excess series
+    * and min(0, running min of prefixes) — all the recurrence needs. */
   def chart(events: DataFrame, muMilli: Map[String, Long],
       watermark: String = "30 minutes",
       idleTtlMs: Option[Long] = None): Dataset[CusumRow] = {
     val s = events.sparkSession
     import s.implicits._
-    val ttlMs = idleTtlMs
-    require(ttlMs.forall(_ > 0), "idleTtlMs must be positive")
     val mu = muMilli // stable reference captured into the closure
 
-    events
-      .withWatermark("ts", watermark)
-      .select(col("event_type"), col("ts"))
-      .as[Ev]
-      .filter(e => mu.contains(e.event_type))
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[CusumState, CusumRow](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key, it, state: GroupState[CusumState]) =>
-          var st = state.getOption.getOrElse(
-            CusumState(None, Map.empty, 0L, 0L))
-          val wmMs = state.getCurrentWatermarkMs()
-          var pending = st.pending
-          it.foreach { e =>
-            val h = e.ts.getTime / HourMs
-            if (st.lastFinalized.forall(h > _))
-              pending = pending.updated(h, pending.getOrElse(h, 0L) + 1L)
-          }
-          if (state.hasTimedOut && pending.isEmpty) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val m = mu(key)
-            val k = m / 4
-            val thresh = 8L * m
-            val out = Vector.newBuilder[CusumRow]
-            var last = st.lastFinalized
-            var pre = st.pre
-            var mn = st.mn
-            if (pending.nonEmpty) {
-              val maxSeen = pending.keys.max
-              var h = last.map(_ + 1L).getOrElse(pending.keys.min)
-              while (h <= maxSeen && (h + 1L) * HourMs <= wmMs) {
-                val cnt = pending.getOrElse(h, 0L)
-                pending -= h
-                pre += 1000L * cnt - m - k
-                if (pre < mn) mn = pre
-                val sPlus = pre - mn
-                out += CusumRow(key, h, cnt, sPlus, thresh,
-                  if (sPlus > thresh) 1 else 0)
-                last = Some(h)
-                h += 1L
-              }
-            }
-            st = CusumState(last, pending, pre, mn)
-            state.update(st)
-            if (pending.nonEmpty) {
-              val nextClose = (pending.keys.min + 1L) * HourMs
-              state.setTimeoutTimestamp(math.max(nextClose, wmMs + 1L))
-            } else ttlMs.foreach { t =>
-              if (wmMs > Long.MinValue) state.setTimeoutTimestamp(wmMs + t)
-            }
-            out.result().iterator
-          }
-      }
+    WatermarkFold.hourChart(
+        WatermarkFold.typedEvents(events, watermark).filter(e => mu.contains(e.event_type)),
+        (0L, 0L), idleTtlMs) { case (key, (pre0, mn0), h, cnt) =>
+      val m = mu(key)
+      val thresh = 8L * m
+      val pre = pre0 + 1000L * cnt - m - m / 4
+      val mn = math.min(mn0, pre)
+      val sPlus = pre - mn
+      ((pre, mn), Some(CusumRow(key, h, cnt, sPlus, thresh,
+        if (sPlus > thresh) 1 else 0)))
+    }
   }
 }

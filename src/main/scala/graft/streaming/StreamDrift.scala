@@ -4,7 +4,6 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.operators.Drift
 import graft.operators.Drift.{DriftRow, RefCdf}
@@ -20,14 +19,14 @@ import graft.operators.Drift.{DriftRow, RefCdf}
   * chart runs, so the stream ≡ batch proof covers the statistic itself,
   * not a transcription.
   *
-  * Lifecycle is [[StreamCusum]]'s discipline: an hour finalizes when
-  * the watermark passes its end; hours are INDEPENDENT (no recurrence),
-  * so gap hours emit nothing and need no zero-fill walk; late events
-  * at or below the finalized horizon drop (ST3); `idleTtlMs` expires
-  * idle keys (ST4). Per-key state is pending hour → length histogram —
-  * value-domain-bounded per hour, independent of traffic volume.
-  * Sources without a reference are dropped: inventing a baseline
-  * online would diverge from the batch artifact.
+  * The lifecycle is [[WatermarkFold]]'s: an hour finalizes when the
+  * watermark passes its end; late drop (ST3) and idle-TTL eviction
+  * (ST4) are WatermarkFold's too. Hours are INDEPENDENT (no recurrence), so
+  * gap hours emit nothing and need no zero-fill walk. Per-key state is
+  * pending hour → length histogram — value-domain-bounded per hour,
+  * independent of traffic volume. Sources without a reference are
+  * dropped: inventing a baseline online would diverge from the batch
+  * artifact.
   */
 object StreamDrift {
 
@@ -37,62 +36,35 @@ object StreamDrift {
       lastFinalized: Option[Long],
       pending: Map[Long, Map[Long, Long]])
 
-  private val HourMs = 3600000L
-
   def chart(docs: DataFrame, ref: Map[String, RefCdf],
       watermark: String = "30 minutes",
       idleTtlMs: Option[Long] = None): Dataset[DriftRow] = {
     val s = docs.sparkSession
     import s.implicits._
-    val ttlMs = idleTtlMs
-    require(ttlMs.forall(_ > 0), "idleTtlMs must be positive")
+    import WatermarkFold.{hourCloseMs, hourOf, isClosed}
     val refs = ref // stable reference captured into the closure
 
-    docs
-      .withWatermark("ts", watermark)
-      .select(col("source"), col("ts"), col("v"))
-      .as[Ev]
-      .filter(e => refs.contains(e.source))
-      .groupByKey(_.source)
-      .flatMapGroupsWithState[DriftState, DriftRow](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key, it, state: GroupState[DriftState]) =>
-          var st = state.getOption.getOrElse(DriftState(None, Map.empty))
-          val wmMs = state.getCurrentWatermarkMs()
-          var pending = st.pending
-          it.foreach { e =>
-            val h = e.ts.getTime / HourMs
-            if (st.lastFinalized.forall(h > _)) {
-              val hist = pending.getOrElse(h, Map.empty)
-              pending = pending.updated(h,
-                hist.updated(e.v, hist.getOrElse(e.v, 0L) + 1L))
-            }
-          }
-          if (state.hasTimedOut && pending.isEmpty) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val rc = refs(key)
-            val out = Vector.newBuilder[DriftRow]
-            var last = st.lastFinalized
-            pending.keys.toSeq.sorted
-              .takeWhile(h => (h + 1L) * HourMs <= wmMs)
-              .foreach { h =>
-                val (n, ks, w1) = Drift.ksW1(pending(h), rc)
-                out += DriftRow(key, h, n, ks, w1)
-                pending -= h
-                last = Some(h)
-              }
-            st = DriftState(last, pending)
-            state.update(st)
-            if (pending.nonEmpty) {
-              val nextClose = (pending.keys.min + 1L) * HourMs
-              state.setTimeoutTimestamp(math.max(nextClose, wmMs + 1L))
-            } else ttlMs.foreach { t =>
-              if (wmMs > Long.MinValue) state.setTimeoutTimestamp(wmMs + t)
-            }
-            out.result().iterator
-          }
-      }
+    WatermarkFold[String, Ev, DriftState, DriftRow](
+        docs.withWatermark("ts", watermark)
+          .select(col("source"), col("ts"), col("v")).as[Ev]
+          .filter(e => refs.contains(e.source)),
+        _.source, DriftState(None, Map.empty), idleTtlMs)(
+      admit = (st, it) => st.copy(pending = it.foldLeft(st.pending) { (p, e) =>
+        val h = hourOf(e.ts)
+        if (st.lastFinalized.forall(h > _)) {
+          val hist = p.getOrElse(h, Map.empty[Long, Long])
+          p.updated(h, hist.updated(e.v, hist.getOrElse(e.v, 0L) + 1L))
+        } else p
+      }),
+      release = { (key, st, wmMs) =>
+        val (closed, open) = st.pending.partition { case (h, _) => isClosed(h, wmMs) }
+        val hours = closed.keys.toVector.sorted
+        (DriftState(hours.lastOption.orElse(st.lastFinalized), open),
+          hours.map { h =>
+            val (n, ks, w1) = Drift.ksW1(closed(h), refs(key))
+            DriftRow(key, h, n, ks, w1)
+          })
+      },
+      nextCloseMs = st => hourCloseMs(st.pending.keys))
   }
 }

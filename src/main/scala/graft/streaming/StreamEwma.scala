@@ -1,10 +1,6 @@
 package graft.streaming
 
-import java.sql.Timestamp
-
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming EWMA control chart — the streaming twin of
   * [[graft.operators.EventsOps.ewmaChart]] (q225), the 13th stream ≡
@@ -25,96 +21,34 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * the watermark passes all input the output EQUALS batch q225 row for
   * row (proved by replay in StreamEwmaSpec).
   *
-  * Late events below the finalized horizon are dropped (ST3);
-  * `idleTtlMs` expires idle keys (ST4), bounding state on an unbounded
-  * key space.
+  * Late drop (ST3), idle-TTL eviction (ST4) and the finalization
+  * timer are [[WatermarkFold]]'s; the hour walk is its `hourChart`.
   */
 object StreamEwma {
-
-  final case class Ev(event_type: String, ts: Timestamp)
-
-  /** ring: last ≤16 finalized counts, OLDEST FIRST. pending: hour →
-    * count for hours not yet closed by the watermark. */
-  final case class EwmaState(
-      ring: Vector[Long],
-      lastFinalized: Option[Long],
-      pending: Map[Long, Long])
 
   final case class EwmaRow(
       event_type: String, epoch_hour: Long, cnt: Long,
       baseline_num: Long, baseline_milli: Long, spike_flag: Int)
 
-  private val HourMs = 3600000L
-
+  /** Per-type state is the ring: the last ≤16 finalized counts, OLDEST
+    * FIRST. */
   def chart(events: DataFrame,
       watermark: String = "30 minutes",
       idleTtlMs: Option[Long] = None): Dataset[EwmaRow] = {
     val s = events.sparkSession
     import s.implicits._
-    val ttlMs = idleTtlMs
-    require(ttlMs.forall(_ > 0), "idleTtlMs must be positive")
-
-    events
-      .withWatermark("ts", watermark)
-      .select(col("event_type"), col("ts"))
-      .as[Ev]
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[EwmaState, EwmaRow](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key, it, state: GroupState[EwmaState]) =>
-          var st = state.getOption.getOrElse(
-            EwmaState(Vector.empty, None, Map.empty))
-          val wmMs = state.getCurrentWatermarkMs()
-          // fold arrivals into pending hour counts; rows at or below an
-          // already-finalized hour are late beyond repair → dropped
-          var pending = st.pending
-          it.foreach { e =>
-            val h = e.ts.getTime / HourMs
-            if (st.lastFinalized.forall(h > _))
-              pending = pending.updated(h, pending.getOrElse(h, 0L) + 1L)
-          }
-          if (state.hasTimedOut && pending.isEmpty) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val out = Vector.newBuilder[EwmaRow]
-            var ring = st.ring
-            var last = st.lastFinalized
-            if (pending.nonEmpty) {
-              val maxSeen = pending.keys.max
-              // contiguous finalizable prefix: every hour from the last
-              // finalized one up to maxSeen whose END the watermark has
-              // passed — gaps finalize as zero counts
-              var h = last.map(_ + 1L).getOrElse(pending.keys.min)
-              while (h <= maxSeen && (h + 1L) * HourMs <= wmMs) {
-                val cnt = pending.getOrElse(h, 0L)
-                pending -= h
-                if (ring.size == 16) {
-                  // ring is oldest-first: ring(i) is lag k = 16 − i,
-                  // whose dyadic weight 2^(16−k) = 2^i — so ring(15)
-                  // (the newest lag) carries 32768, ring(0) carries 1
-                  var base = 0L
-                  var i = 0
-                  while (i < 16) { base += ring(i) << i; i += 1 }
-                  out += EwmaRow(key, h, cnt, base, 1000L * base / 65535L,
-                    if (cnt * 65535L > 2L * base) 1 else 0)
-                }
-                ring = (if (ring.size == 16) ring.tail else ring) :+ cnt
-                last = Some(h)
-                h += 1L
-              }
-            }
-            st = EwmaState(ring, last, pending)
-            state.update(st)
-            if (pending.nonEmpty) {
-              // wake when the earliest open hour can close
-              val nextClose = (pending.keys.min + 1L) * HourMs
-              state.setTimeoutTimestamp(math.max(nextClose, wmMs + 1L))
-            } else ttlMs.foreach { t =>
-              if (wmMs > Long.MinValue) state.setTimeoutTimestamp(wmMs + t)
-            }
-            out.result().iterator
-          }
+    WatermarkFold.hourChart(WatermarkFold.typedEvents(events, watermark),
+        Vector.empty[Long], idleTtlMs) { (key, ring, h, cnt) =>
+      val row = if (ring.size < 16) None else {
+        // ring(i) is lag k = 16 − i, whose dyadic weight 2^(16−k) = 2^i —
+        // so ring(15) (the newest lag) carries 32768, ring(0) carries 1
+        var base = 0L
+        var i = 0
+        while (i < 16) { base += ring(i) << i; i += 1 }
+        Some(EwmaRow(key, h, cnt, base, 1000L * base / 65535L,
+          if (cnt * 65535L > 2L * base) 1 else 0))
       }
+      ((if (ring.size == 16) ring.tail else ring) :+ cnt, row)
+    }
   }
 }

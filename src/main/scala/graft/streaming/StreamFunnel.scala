@@ -3,7 +3,6 @@ package graft.streaming
 import graft.operators.Funnel
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming funnel / sequence-pattern matching — the streaming twin of
   * the batch kernel in [[graft.operators.Funnel]] (q112), built on
@@ -46,79 +45,33 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object StreamFunnel {
 
-  final case class Ev(user_id: Long, ts: java.sql.Timestamp, event_id: Long, c: String)
-
-  /** (epoch micros, event_id, marker) — the batch kernel's total order. */
-  final case class Pending(tUs: Long, id: Long, c: String)
-
-  final case class FunnelState(
-      vec: Vector[Long],
-      n: Long,
-      finalizedWmMs: Long,
-      pending: Vector[Pending])
-
   final case class FunnelRow(user_id: Long, n_events: Long, funnel_depth: Int)
 
-  /** Shared watermark-driven runner: `marker` is computed SCAN-SIDE
-    * (before the shuffle into the stateful operator) and is all the
-    * per-event payload the state ever buffers; `newScan` builds the
-    * same O(k) per-key state machine the batch kernel runs
-    * ([[graft.operators.Funnel.FunnelScan]]), persisted between
-    * micro-batches as its save/load Long vector. */
+  /** Shared watermark-driven runner over [[WatermarkFold]]'s
+    * `orderedScan`: `marker` is computed SCAN-SIDE (before the shuffle
+    * into the stateful operator) and is all the per-event payload the
+    * state ever buffers; `newScan` builds the same O(k) per-key state
+    * machine the batch kernel runs ([[graft.operators.Funnel.FunnelScan]]),
+    * persisted between micro-batches as its save/load Long vector with
+    * the finalized event count. */
   private def run(events: DataFrame, marker: Column,
       watermark: String, idleTtlMs: Option[Long])(
       newScan: () => Funnel.FunnelScan): Dataset[FunnelRow] = {
     val s = events.sparkSession
     import s.implicits._
-    val ttlMs = idleTtlMs
-    require(ttlMs.forall(_ > 0), "idleTtlMs must be positive")
 
-    events
-      .withWatermark("ts", watermark)
-      .select(col("user_id"), col("ts"), col("event_id"), marker.as("c"))
-      .as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[FunnelState, FunnelRow](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key, it, state: GroupState[FunnelState]) =>
-          val scan = newScan()
-          var st = state.getOption.getOrElse(FunnelState(scan.save, 0L, Long.MinValue, Vector.empty))
-          scan.load(st.vec)
-          val wmMs = state.getCurrentWatermarkMs()
-          // late-beyond-finalized events are dropped (ST3 policy); the
-          // rest join the pending buffer
-          val incoming = it.flatMap { e =>
-            val tMs = e.ts.getTime
-            if (tMs < st.finalizedWmMs) None
-            else Some(Pending(tMs * 1000L + (e.ts.getNanos / 1000L) % 1000L, e.event_id, e.c))
-          }.toVector
-
-          if (state.hasTimedOut && incoming.isEmpty && st.pending.isEmpty) {
-            // idle-TTL expiry: nothing buffered, nothing new — evict
-            state.remove()
-            Iterator.empty
-          } else {
-            val all = st.pending ++ incoming
-            // finalize everything the watermark has passed, in the batch
-            // kernel's exact total order
-            val (ready, still) = all.partition(_.tUs / 1000L < wmMs)
-            var n = st.n
-            ready.sortBy(p => (p.tUs, p.id)).foreach { p =>
-              scan.update(p.tUs, p.c)
-              n += 1L
-            }
-            st = FunnelState(scan.save, n, math.max(st.finalizedWmMs, wmMs), still)
-            state.update(st)
-            if (still.nonEmpty) {
-              // wake up when the watermark passes the earliest pending
-              // event (strictly greater than both it and the current wm)
-              state.setTimeoutTimestamp(math.max(still.map(_.tUs / 1000L).min + 1L, wmMs + 1L))
-            } else ttlMs.foreach { t =>
-              if (wmMs > Long.MinValue) state.setTimeoutTimestamp(wmMs + t)
-            }
-            if (ready.nonEmpty) Iterator(FunnelRow(key, n, scan.depth)) else Iterator.empty
-          }
-      }
+    WatermarkFold.orderedScan(
+        events.withWatermark("ts", watermark)
+          .select(col("user_id"), col("ts"), col("event_id"), marker.as("p"))
+          .as[WatermarkFold.UserEvent[String]],
+        (newScan().save, 0L), idleTtlMs) { case (key, (vec, n0), ready) =>
+      val scan = newScan()
+      scan.load(vec)
+      ready.foreach(b => scan.update(b.tUs, b.p))
+      val n = n0 + ready.size
+      ((scan.save, n),
+        if (ready.nonEmpty) Seq(FunnelRow(key, n, scan.depth)) else Nil)
+    }
   }
 
   def funnel(events: DataFrame, steps: Seq[String],

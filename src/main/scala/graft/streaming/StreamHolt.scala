@@ -1,10 +1,6 @@
 package graft.streaming
 
-import java.sql.Timestamp
-
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.operators.TimeSeries
 import graft.operators.TimeSeries.{HoltRow, HoltState}
@@ -17,80 +13,26 @@ import graft.operators.TimeSeries.{HoltRow, HoltState}
   * [[TimeSeries.holtChart]] fold, so the stream ≡ batch proof covers
   * the recurrence itself.
   *
-  * Lifecycle is [[StreamCusum]]'s discipline verbatim: an hour
-  * finalizes when the watermark passes its end; finalization walks
-  * forward ZERO-FILLING gap hours (Holt is a recurrence — a silent
-  * hour is a y=0 observation, exactly the batch spine's semantics),
-  * never past the newest observed hour; late events at or below the
-  * finalized horizon drop (ST3); `idleTtlMs` expires idle keys (ST4).
-  * Per-key state is the three-long HoltState plus the pending
-  * hour→count map (watermark-bounded).
+  * The hour lifecycle is [[WatermarkFold]]'s `hourChart`: an hour
+  * finalizes when the watermark passes its end; gap hours ZERO-FILL
+  * (Holt is a recurrence — a silent hour is a y=0 observation, exactly
+  * the batch spine's semantics), never past the newest observed hour;
+  * late drop (ST3) and idle-TTL eviction (ST4) are WatermarkFold's — a
+  * type evicted while idle restarts from [[HoltState.empty]]. Per-key
+  * state is the four-long HoltState plus the pending hour→count map
+  * (watermark-bounded).
   */
 object StreamHolt {
-
-  final case class Ev(event_type: String, ts: Timestamp)
-
-  final case class HoltKeyState(
-      lastFinalized: Option[Long],
-      pending: Map[Long, Long],
-      holt: HoltState)
-
-  private val HourMs = 3600000L
 
   def chart(events: DataFrame,
       watermark: String = "30 minutes",
       idleTtlMs: Option[Long] = None): Dataset[HoltRow] = {
     val s = events.sparkSession
     import s.implicits._
-    val ttlMs = idleTtlMs
-    require(ttlMs.forall(_ > 0), "idleTtlMs must be positive")
-
-    events
-      .withWatermark("ts", watermark)
-      .select(col("event_type"), col("ts"))
-      .as[Ev]
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[HoltKeyState, HoltRow](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key, it, state: GroupState[HoltKeyState]) =>
-          var st = state.getOption.getOrElse(
-            HoltKeyState(None, Map.empty, HoltState.empty))
-          val wmMs = state.getCurrentWatermarkMs()
-          var pending = st.pending
-          it.foreach { e =>
-            val h = e.ts.getTime / HourMs
-            if (st.lastFinalized.forall(h > _))
-              pending = pending.updated(h, pending.getOrElse(h, 0L) + 1L)
-          }
-          if (state.hasTimedOut && pending.isEmpty) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val out = Vector.newBuilder[HoltRow]
-            var last = st.lastFinalized
-            var holt = st.holt
-            if (pending.nonEmpty) {
-              val maxSeen = pending.keys.max
-              var h = last.map(_ + 1L).getOrElse(pending.keys.min)
-              while (h <= maxSeen && (h + 1L) * HourMs <= wmMs) {
-                val cnt = pending.getOrElse(h, 0L)
-                pending -= h
-                holt = holt.step(cnt)
-                out += HoltRow(key, h, cnt, holt.l, holt.b, holt.l + holt.b)
-                last = Some(h)
-                h += 1L
-              }
-            }
-            st = HoltKeyState(last, pending, holt)
-            state.update(st)
-            if (pending.nonEmpty) {
-              val nextClose = (pending.keys.min + 1L) * HourMs
-              state.setTimeoutTimestamp(math.max(nextClose, wmMs + 1L))
-            } else ttlMs.foreach { t =>
-              if (wmMs > Long.MinValue) state.setTimeoutTimestamp(wmMs + t)
-            }
-            out.result().iterator
-          }
-      }
+    WatermarkFold.hourChart(WatermarkFold.typedEvents(events, watermark),
+        HoltState.empty, idleTtlMs) { (key, holt, h, cnt) =>
+      val next = holt.step(cnt)
+      (next, Some(HoltRow(key, h, cnt, next.l, next.b, next.l + next.b)))
+    }
   }
 }

@@ -20,11 +20,12 @@ import graft.operators.Dedup
   * doc's own shingles needs nothing outside the row, so the same 8
   * minhashes (and the same 4 sorted-pair band keys — Dedup.NumSeeds /
   * NumBands / BandSize, the q27/q28 constants) evaluate scan-side as
-  * array expressions over `split(text)`. [[withBandKeys]] appends them
-  * identically to batch and streaming frames, and the spec pins it
-  * EQUAL per doc to the batch tier's `Dedup.signatureWideOf` +
-  * `Dedup.withBandKeys` aggregate path — one rule, two execution
-  * shapes. (array_min over the shingle ARRAY equals the batch min over
+  * array expressions over `split(text)`. Both tiers build their SQL
+  * from the one rule, `Dedup.seedHashSql` and `Dedup.bandKeySql`;
+  * [[withBandKeys]] appends them identically to batch and streaming
+  * frames, and the spec pins it EQUAL per doc to the batch tier's
+  * `Dedup.signatureWideOf` + `Dedup.withBandKeys` aggregate path — one
+  * rule, two execution shapes. (array_min over the shingle ARRAY equals the batch min over
   * the DISTINCT shingle set: duplicates never change a min.)
   *
   * Dedup itself is `dropDuplicatesWithinWatermark` on the exploded
@@ -56,11 +57,10 @@ object StreamMinHash {
     * row). */
   def withBandKeys(df: DataFrame, textCol: String = "text"): DataFrame = {
     val mh = (0 until Dedup.NumSeeds).map(i =>
-      s"array_min(transform(__sh, x -> md5(concat(x, ':$i'))))").mkString(", ")
+      s"array_min(transform(__sh, x -> ${Dedup.seedHashSql("x", i)}))").mkString(", ")
     val bandStructs = (0 until Dedup.NumBands).map { b =>
-      val ms = (b * Dedup.BandSize until (b + 1) * Dedup.BandSize)
-        .map(i => s"element_at(__mh, ${i + 1})").mkString(", ")
-      s"named_struct('band', $b, 'band_key', md5(array_join(array_sort(array($ms)), ',')))"
+      val key = Dedup.bandKeySql(b)(i => s"element_at(__mh, ${i + 1})")
+      s"named_struct('band', $b, 'band_key', $key)"
     }.mkString(", ")
     df
       .withColumn("__w", split(col(textCol), " "))

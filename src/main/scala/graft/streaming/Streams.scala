@@ -3,6 +3,7 @@ package graft.streaming
 import graft.operators.ViewsPipeline
 import graft.sources.EventLog
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
 import org.apache.spark.sql.Row
@@ -171,19 +172,20 @@ object Streams {
       .withWatermark("ts", watermark)
       .dropDuplicatesWithinWatermark("user_ip", "item_id", "ts")
 
+  /** `events` watermarked on ts. Chaining after another stateful op
+    * (e.g. dedupedStream) already defines the watermark, and Spark
+    * forbids redefining it — only add one when the upstream hasn't. */
+  private def watermarkedOnce(events: DataFrame, watermark: String): DataFrame =
+    if (events.queryExecution.analyzed.exists(_.isInstanceOf[EventTimeWatermark])) events
+    else events.withWatermark("ts", watermark)
+
   /** A2/A3 variant with session windows: per-user activity sessions
     * closed after `gap` of inactivity — the streaming twin of the batch
     * gap-threshold sessionization (q21). State is merged per key as
     * windows coalesce; watermark finalizes and evicts closed sessions. */
   def sessionCounts(events: DataFrame, gap: String = "30 minutes",
       watermark: String = "30 minutes"): DataFrame = {
-    // Chaining after another stateful op (e.g. dedupedStream) already
-    // defines the watermark, and Spark forbids redefining it — only add
-    // one when the upstream hasn't.
-    val alreadyWatermarked = events.queryExecution.analyzed.find(
-      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark]).isDefined
-    val src = if (alreadyWatermarked) events else events.withWatermark("ts", watermark)
-    src
+    watermarkedOnce(events, watermark)
       .groupBy(session_window(col("ts"), gap).as("w"), col("user_ip"))
       .agg(count(lit(1)).as("n_events"))
       .select(col("w.start").as("session_start"), col("w.end").as("session_end"),
@@ -207,10 +209,7 @@ object Streams {
     * q86 keeps exact verification batch-side. */
   def sessionAttribution(events: DataFrame, gap: String = "2 hours",
       watermark: String = "30 minutes"): DataFrame = {
-    val alreadyWatermarked = events.queryExecution.analyzed.find(
-      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark]).isDefined
-    val src = if (alreadyWatermarked) events else events.withWatermark("ts", watermark)
-    src
+    watermarkedOnce(events, watermark)
       .groupBy(session_window(col("ts"), gap).as("w"), col("user_id"))
       .agg(min(struct(unix_micros(col("ts")).as("t"), col("event_id").as("e"),
           col("event_type").as("y"))).as("first"),

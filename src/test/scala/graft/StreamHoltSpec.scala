@@ -73,4 +73,40 @@ class StreamHoltSpec extends SparkSpec {
     assert(got(("b", h0 + 3))._3 == 0L, "constant series trend must be 0")
     assert(!got.keys.exists(_._1 == "zz"))
   }
+
+  test("idle TTL evicts a quiet type; its return restarts the recurrence") {
+    import spark.implicits._
+    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val in = MemoryStream[(Timestamp, String)]
+    val events = in.toDF().toDF("ts", "event_type")
+    intercept[IllegalArgumentException](StreamHolt.chart(events, idleTtlMs = Some(0L)))
+    val q = StreamHolt.chart(events, idleTtlMs = Some(60000L)) // 1 minute of event time
+      .writeStream.format("memory").queryName("holt_ttl")
+      .outputMode("append")
+      .option("checkpointLocation", Files.createTempDirectory("graft-holt-ttl").toString)
+      .start()
+    // One batch per quiet step: a timeout fires only in a batch whose
+    // watermark (from the PREVIOUS batch, 30-min delay, driven by type
+    // zz) has passed its arm, and a type receiving data is not timed out.
+    val a = "a"
+    try Seq(
+      Seq.fill(2)((ts(0, 0), a)) ++ Seq.fill(3)((ts(1, 0), a)) :+ ((ts(0, 5), "zz")),
+      Seq((ts(3, 0), "zz")),  // after: wm = 2:30
+      Seq((ts(3, 10), "zz")), // a's hours 0-1 close; eviction armed at wm + 60 s
+      Seq((ts(5, 0), "zz")),  // wm 2:40 passed the arm: a evicted
+      Seq.fill(4)((ts(4, 45), a)), // a reappears inside the watermark
+      Seq((ts(7, 0), "zz")),
+      Seq((ts(7, 10), "zz"))  // a's hour 4 closes
+    ).foreach { b => in.addData(b: _*); q.processAllAvailable() }
+    finally q.stop()
+
+    val h0 = t0 / 3600000L
+    val got = spark.table("holt_ttl").filter(col("event_type") === a)
+      .collect().map(r => r.getLong(1) - h0 -> ((r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
+    assert(got.keySet == Set(0L, 1L, 4L), s"evicted type must not zero-fill its gap: $got")
+    assert(got(0L) == ((2L, 2000L, 0L)))
+    // resuming would have stepped hours 2-3 as zeros; a restart starts
+    // the recurrence afresh at l = 1000 × cnt, b = 0
+    assert(got(4L) == ((4L, 4000L, 0L)), s"got ${got(4L)}")
+  }
 }
