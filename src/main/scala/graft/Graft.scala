@@ -188,9 +188,13 @@ object Graft {
 
   /** Eager local checkpoint that a SessionCache entry is allowed to
     * reference: released only by [[clearCaches]], together with the
-    * owning cache entry. */
+    * owning cache entry. The leaf keeps the output partitioning the
+    * frame was staged with (a `repartition(n, k)` stays partitioned on
+    * `k`), as the `.persist`ed frame it replaces would, so consumers'
+    * joins on that key do not shuffle it again. */
   private[graft] def cacheScopedCheckpoint(df: DataFrame): DataFrame =
-    register(cacheStaged, df.localCheckpoint(true))
+    register(cacheStaged, org.apache.spark.sql.execution.StagedLeaf
+      .withFinalPartitioning(df, df.localCheckpoint(true)))
 
   /** Eagerly free ONE checkpointed frame's storage blocks before any
     * registry boundary. Its per-round caller is [[iterate]], which frees

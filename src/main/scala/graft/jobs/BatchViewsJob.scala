@@ -2,6 +2,7 @@ package graft.jobs
 
 import graft.operators.ViewsPipeline
 import graft.sources.{EventLog, IncrementalScan}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -44,9 +45,46 @@ object BatchViewsJob {
     val cleaned = ViewsPipeline.clean(EventLog.readHourlyCsv(s, inPrefix))
     val detected = ViewsPipeline.detectSuspicious(cleaned)
     val snap = ViewsPipeline.suspiciousSnapshot(detected, current_timestamp(), ttlHours)
-    snap.write.mode("overwrite").parquet(snapshotPath)
+    publishSnapshot(s, snap, snapshotPath)
     s.read.parquet(snapshotPath).count()
   }
+
+  /** Called between the two filesystem steps of [[publishSnapshot]]
+    * (new part files moved in, superseded ones not yet deleted), so a
+    * spec can read the snapshot at that point. A no-op otherwise. */
+  @volatile private[graft] var midPublish: () => Unit = () => ()
+
+  /** Replace the snapshot at `snapshotPath` with `rows` so that a reader
+    * listing at any moment sees the old set, old ∪ new, or the new set,
+    * never a missing or empty path (which a reader takes as the empty
+    * bootstrap deny set, passing every bot). `rows` is written to a
+    * sibling temp dir first; its part files, uniquely named per write,
+    * are moved into the live dir, and only then are the entries they
+    * supersede deleted. Readers fold the max `expires_at` per IP, so
+    * old ∪ new denies exactly the IPs either set denies. A crash leaves
+    * the old snapshot, possibly with the new rows beside it. A path that
+    * does not exist yet takes the whole temp dir in one rename. */
+  private[graft] def publishSnapshot(s: SparkSession, rows: DataFrame,
+      snapshotPath: String): Unit = {
+    val p = new Path(snapshotPath)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val tmp = new Path(p.getParent, s".publish-${java.util.UUID.randomUUID()}")
+    rows.write.parquet(tmp.toString)
+    if (!fs.exists(p)) require(fs.rename(tmp, p), s"snapshot publish to $p failed")
+    else {
+      val superseded = fs.listStatus(p).map(_.getPath)
+      for (f <- fs.listStatus(tmp) if f.isFile && !hidden(f.getPath))
+        require(fs.rename(f.getPath, new Path(p, f.getPath.getName)),
+          s"snapshot publish of ${f.getPath} to $p failed")
+      midPublish()
+      superseded.foreach(fs.delete(_, true))
+      fs.delete(tmp, true)
+    }
+  }
+
+  /** Spark's readers skip `_` and `.` names (markers, checksums). */
+  private def hidden(f: Path): Boolean =
+    f.getName.startsWith("_") || f.getName.startsWith(".")
 
   /** Periodic snapshot compaction (SURVEY §4: "read-time filter +
     * periodic compaction" — this is the compaction half). Rewrites the
@@ -61,22 +99,16 @@ object BatchViewsJob {
     * boundary filterSuspicious applies, so compaction never changes
     * what a reader sees.
     *
-    * The rewrite is write-tmp-then-swap: the live set is materialized
-    * into a sibling temp dir first, so a crash mid-compaction leaves
-    * the old snapshot intact (and a reader never observes a
-    * half-written one). Returns the surviving row count. */
+    * The rewrite goes through [[publishSnapshot]]: a crash
+    * mid-compaction leaves the old rows in place, and a reader never
+    * observes a half-written or missing snapshot. Returns the surviving
+    * row count. */
   def compactSnapshot(s: SparkSession, snapshotPath: String,
       asOf: Column = current_timestamp()): Long = {
-    val p = new org.apache.hadoop.fs.Path(snapshotPath)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     val live = ViewsPipeline.readSnapshotOrEmpty(s, snapshotPath)
       .filter(col("expires_at") > asOf)
       .groupBy(col("user_ip")).agg(max(col("expires_at")).as("expires_at"))
-    val tmp = new org.apache.hadoop.fs.Path(p.getParent,
-      s".compact-${java.util.UUID.randomUUID()}")
-    live.write.mode("overwrite").parquet(tmp.toString)
-    fs.delete(p, true)
-    require(fs.rename(tmp, p), s"snapshot swap to $p failed")
+    publishSnapshot(s, live, snapshotPath)
     s.read.parquet(snapshotPath).count()
   }
 }

@@ -88,14 +88,18 @@ object Curation {
     fixpoint.select(col("doc_id"), col("label").as("cluster_id"))
   }
 
-  /** Cluster labels of the verified near-dup graph — shared (cached)
-    * between q68's cluster report and q63's near-dup removal stage, so
-    * the iterative propagation runs once per (session, dir). */
+  /** Cluster labels of the verified near-dup graph — memoized per
+    * (session, dir) and shared by q68's cluster report, q63's near-dup
+    * removal stage and q197's split, so the iterative propagation runs
+    * once. Not `.cache()`d: the labels are a projection over the
+    * converged round, which [[clusterLabels]] already stages as a
+    * cache-scoped checkpoint, so a cache would only keep a second,
+    * columnar copy and nest an InMemoryRelation into every consumer. */
   private val clusterCache = new SessionCache[DataFrame]
   private[graft] def dupClusters(
       s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
     clusterCache.getOrElseUpdate(s, dir)(
-      clusterLabels(Dedup.neardupPairs(s, dir)).cache())
+      clusterLabels(Dedup.neardupPairs(s, dir)))
 
   /** DuckDB twin of [[dupClusters]]: recursive min-label walk over the
     * verified pair graph. Expects a CTE named `jp` (the neardup pairs)
@@ -585,43 +589,50 @@ object Curation {
     * expansion, bounded by per-order line count², one shuffle — never a
     * lineitem self-join. Shared by q130 (triangles) and q131 (PageRank).
     *
-    * MATERIALIZED ONCE per (session, dir): q130 fans the edge list into
-    * four plan branches (deg ×2 via unionAll, the oriented join, the
-    * n_edges count) and q131's unrolled PageRank touches it in every
-    * iteration — without a reuse point the collect_set aggregation
-    * re-evaluates 4×+ (it was 31% of the r9 bench). A persisted DF is
-    * the local-mode analog of the 100-TB answer (stage the derived edge
-    * table to storage once, then fan out). Like every graph-family
-    * memo it is a SessionCache: [[graft.Graft.clearCaches]] unpersists
-    * it at cache-family boundaries (SCALE.md §6), and a stopped
-    * session's entry is dropped with the others. */
+    * Staged once per (session, dir) as a cache-scoped checkpoint: q130
+    * fans the edge list into four plan branches (deg ×2 via unionAll,
+    * the oriented join, the n_edges count) and q131's PageRank reads it
+    * in every iteration, so without a reuse point the collect_set
+    * aggregation would re-evaluate per branch. The checkpoint is the
+    * local-mode analog of the 100-TB answer (stage the derived edge
+    * table once, then fan out): an eager UnsafeRow-block leaf, so every
+    * consumer plans over a flat `LogicalRDD` and re-reads rows without
+    * columnar decoding, where a `.persist` would nest this memo's whole
+    * cached plan into every frame built on it (SCALE.md §6). Like every
+    * graph-family memo it is a SessionCache entry whose blocks live
+    * exactly as long as the entry: [[graft.Graft.clearCaches]] frees
+    * them at cache-family boundaries, and a stopped session's entry is
+    * dropped with the others. */
   private val edgeCache = new SessionCache[DataFrame]
   private[graft] def coPurchaseEdges(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
     edgeCache.getOrElseUpdate(s, dir) {
       undirectedEdges(Tables.lineitem(s, dir)
           .select(col("l_orderkey").as("gid"), col("l_partkey").as("member")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(graft.Graft.cacheScopedCheckpoint)
     }
 
-  /** Per-node degree table (n, deg) of the co-purchase graph, persisted
-    * once per (session, dir): q130's orientation and q131's PageRank
-    * both need it, and each previously rebuilt it from the raw edge
-    * list (one extra edge-sized union + agg per query). Node-sized —
-    * cheap to keep, saves a full edge pass per consumer. */
+  /** Per-node degree table (n, deg) of the co-purchase graph, staged
+    * once per (session, dir) as a cache-scoped checkpoint over the edge
+    * leaf: q130's orientation, q131's PageRank and q251's histogram all
+    * read it, and a per-consumer rebuild would cost one edge-sized
+    * union + agg each. Node-sized, so cheap to keep; a flat leaf, so
+    * the frames built on it carry no copy of its plan. */
   private val degCache = new SessionCache[DataFrame]
   private[graft] def coPurchaseDegrees(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
     degCache.getOrElseUpdate(s, dir) {
       val edges = coPurchaseEdges(s, dir)
       edges.select(col("x").as("n")).unionAll(edges.select(col("y").as("n")))
         .groupBy(col("n")).agg(count(lit(1)).as("deg"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(graft.Graft.cacheScopedCheckpoint)
     }
 
   /** Degree-oriented edge list (u, v) with π(u) < π(v) under
     * π = (degree, id) — the orientation that bounds every out-degree by
-    * O(√m). Persisted once per (session, dir): q130's plan reads it
-    * TWICE (adjacency build + the per-edge probe), so without a reuse
-    * point the two degree joins re-evaluate per branch. Edge-sized. */
+    * O(√m). Staged once per (session, dir) as a cache-scoped
+    * checkpoint: q130's plan reads it TWICE (adjacency build + the
+    * per-edge probe), so without a reuse point the two degree joins
+    * re-evaluate per branch, and as a flat leaf neither branch plans
+    * the degree joins again. Edge-sized. */
   private val orientCache = new SessionCache[DataFrame]
   private[graft] def orientedCoPurchase(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
     orientCache.getOrElseUpdate(s, dir) {
@@ -633,18 +644,19 @@ object Curation {
       ord.select(
           when(fwd, col("x")).otherwise(col("y")).as("u"),
           when(fwd, col("y")).otherwise(col("x")).as("v"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(graft.Graft.cacheScopedCheckpoint)
     }
 
   /** Per-node sorted out-neighbor arrays (u, nbr) of the oriented
     * graph — q130's adjacency, bounded O(√m) per row by the
     * orientation; sorted at build so the per-edge intersection runs
     * over ordered arrays (and the plan is deterministic regardless of
-    * shuffle order). Persisted once per (session, dir): q130's plan
-    * reads it twice per execution (both probe build sides), so the
-    * collect_list aggregate used to re-run per branch per rep. Total
-    * payload ≈ one long per oriented edge — the same order of storage
-    * as the edge caches beside it. */
+    * shuffle order). Staged once per (session, dir) as a cache-scoped
+    * checkpoint: q130's plan reads it twice per execution (both probe
+    * build sides), so without a reuse point the collect_list aggregate
+    * re-runs per branch per rep; as a flat leaf each probe side is one
+    * scan of UnsafeRow blocks. Total payload ≈ one long per oriented
+    * edge — the same order of storage as the edge memos beside it. */
   private val adjCache = new SessionCache[DataFrame]
   private[graft] def orientedAdjacency(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
     adjCache.getOrElseUpdate(s, dir) {
@@ -652,7 +664,7 @@ object Curation {
         .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt, col("u"))
         .groupBy(col("u"))
         .agg(sort_array(collect_list(col("v"))).as("nbr"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(graft.Graft.cacheScopedCheckpoint)
     }
 
   /** Distinct undirected edges {x < y} between members sharing a group
@@ -669,24 +681,18 @@ object Curation {
       .distinct()
 
   /** src-repartitioned directed expansion of the co-purchase edge list,
-    * persisted once per (session, dir): every PageRank iteration and
-    * both of q223's wedge joins attach node-sized frames ON src, so
-    * staging the edges pre-co-located with that key makes the edge side
-    * of those joins shuffle-free — the edge table (the only frame that
-    * is corpus-sized here) is shuffled ONCE at staging and never again.
-    * (r16 staged by dst instead, betting AQE would broadcast the rank
-    * table so the dst aggregation inherited the staging; the measured
-    * plan broadcast the EDGE side — accurate cache stats vs an
-    * unestimated join subtree — so the staging bought nothing locally,
-    * and at sf10 the fallback was a per-iteration edge-sorting SMJ that
-    * spilled 83 GB under a 16 GiB heap. With src staging the dst
-    * aggregate pays one partial-agg-reduced exchange per iteration —
-    * node-bounded rows, never edge-sized, no sorts.) Lives in a
-    * registry-managed SessionCache (not a per-execution persist —
-    * the old shape staged a FRESH persisted copy on every pageRank call
-    * and never unpersisted it, stacking one copy per bench rep until
-    * the next clearCaches boundary): reps reuse one copy, and
-    * Graft.clearCaches owns the lifecycle like every other helper
+    * staged once per (session, dir) as a cache-scoped checkpoint: every
+    * PageRank iteration and both of q223's wedge joins attach node-sized
+    * frames ON src, so staging the edges pre-co-located with that key
+    * makes the edge side of those joins shuffle-free — the edge table
+    * (the only frame that is corpus-sized here) is shuffled ONCE at
+    * staging and never again. The checkpoint leaf keeps the staged
+    * hash partitioning, so the consumers' joins still see it, and
+    * unlike a `.persist` it carries no nested copy of the edge memo's
+    * plan. The dst aggregate pays one partial-agg-reduced exchange per
+    * iteration (node-bounded rows, never edge-sized, no sorts); staging
+    * by dst instead was measured worse (SCALE.md §6). Reps reuse one
+    * copy, and Graft.clearCaches frees it like every other helper
     * frame. */
   private val srcEdgeCache = new SessionCache[DataFrame]
   private[graft] def srcStagedCoPurchase(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
@@ -705,7 +711,7 @@ object Curation {
         // re-shuffle — and plans stay host-independent (ADVICE r16).
         .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt,
           col("src"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(graft.Graft.cacheScopedCheckpoint)
     }
 
   /** Node count of the co-purchase graph, memoized per (session, dir)

@@ -32,14 +32,11 @@ object Dedup {
   val BandSize = 2   // rows per LSH band => 4 bands, sim threshold ~ (1/4)^(1/2) = 0.5
   val NumBands: Int = NumSeeds / BandSize
 
-  /** (doc_id, shingle): distinct word-3-gram shingles per doc.
-    * Guard sequence() against <3-token docs (Spark sequence descends when
-    * stop<start). Cached: the LSH candidate self-join and the Jaccard
-    * verify both walk this lineage several times — without the cache the
-    * whole shingle+minhash pipeline would be recomputed per branch. */
-  /** Shingle set of an arbitrary (doc_id, text) frame — the signature
-    * machinery is per-doc absolute (md5-based), so it composes into the
-    * incremental path (IncrementalDedup) unchanged. */
+  /** Shingle set (doc_id, sh) of an arbitrary (doc_id, text) frame:
+    * distinct word-3-gram shingles per doc. The signature machinery is
+    * per-doc absolute (md5-based), so it composes into the incremental
+    * path (IncrementalDedup) unchanged. Guards sequence() against
+    * <3-token docs (Spark sequence descends when stop<start). */
   private[graft] def shinglesOf(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"), split(col("text"), " ").as("w"))
@@ -49,6 +46,10 @@ object Dedup {
       .distinct()
 
   private val shingleCache = new SessionCache[DataFrame]
+  /** (doc_id, sh): the corpus's shingle set, memoized per
+    * (session, dir). Cached: the LSH candidate self-join and the Jaccard
+    * verify both walk this lineage several times — without the cache the
+    * whole shingle+minhash pipeline would be recomputed per branch. */
   private[operators] def shingles(s: SparkSession, dir: String): DataFrame =
     shingleCache.getOrElseUpdate(s, dir) {
       shinglesOf(Tables.documents(s, dir)).cache()

@@ -2,8 +2,12 @@ package graft
 
 import java.nio.file.Files
 
+import scala.collection.mutable
+
 import graft.jobs.BatchViewsJob
+import graft.operators.ViewsPipeline
 import graft.sources.{DataGen, EventLog}
+import graft.streaming.SnapshotFollower
 import org.apache.spark.sql.functions._
 
 class BatchViewsJobSpec extends SparkSpec {
@@ -45,6 +49,45 @@ class BatchViewsJobSpec extends SparkSpec {
     val r2 = BatchViewsJob.run(spark, prefix, snap, out, mark)
     assert(r2.rowsProcessed > 0)
     assert(spark.read.parquet(out).count() == human1 + human2)
+  }
+
+  test("snapshot writers never show a reader an empty deny set mid-publish") {
+    import spark.implicits._
+    val users = DataGen.users(20, seed = 11L)
+    val botIps = users.filter(_.isBot).map(_.userIp).toSet
+    val h0 = 1700000000L - (1700000000L % 3600)
+    val base = Files.createTempDirectory("graft-publish").toString
+    val prefix = s"$base/in"; val snap = s"$base/snap"
+    val t = java.time.Instant.ofEpochSecond(h0).atZone(java.time.ZoneOffset.UTC)
+    EventLog.writeHourlyCsv(DataGen.viewsDF(spark,
+        DataGen.hourOfViews(users, DataGen.items(40), h0, seed = h0)),
+      f"$prefix/${t.getYear}%04d/${t.getMonthValue}%02d/${t.getDayOfMonth}%02d/${t.getHour}%02d.csv",
+      singleFile = true)
+    val probe = (botIps.toSeq :+ "human").toDF("user_ip")
+    // what a stream batch reading the snapshot right now would deny: a
+    // fresh follower lists the path, and the re-read must agree with it
+    def denied(): Set[String] = {
+      val kept = new SnapshotFollower(snap).filter(probe)
+        .collect().map(_.getString(0)).toSet
+      val twin = ViewsPipeline.filterSuspicious(probe,
+        ViewsPipeline.readSnapshotOrEmpty(spark, snap), current_timestamp())
+        .collect().map(_.getString(0)).toSet
+      assert(kept == twin)
+      (botIps + "human") -- kept
+    }
+    assert(BatchViewsJob.detectAndSnapshot(spark, prefix, snap) == botIps.size)
+    assert(denied() == botIps)
+    val seen = mutable.Buffer.empty[Set[String]]
+    BatchViewsJob.midPublish = () => seen += denied()
+    try {
+      BatchViewsJob.detectAndSnapshot(spark, prefix, snap)
+      BatchViewsJob.compactSnapshot(spark, snap)
+    } finally BatchViewsJob.midPublish = () => ()
+    // both writers passed the point between moving the new files in and
+    // deleting the old ones, and a reader there denied every bot
+    assert(seen == Seq(botIps, botIps))
+    assert(denied() == botIps)
+    assert(spark.read.parquet(snap).count() == botIps.size)
   }
 
   test("snapshot compaction drops expired keys, keeps latest TTL per key, boundary-exact") {

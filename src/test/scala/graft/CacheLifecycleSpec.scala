@@ -3,7 +3,8 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import org.apache.commons.io.FileUtils
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
 /** Graft.clearCaches contract (SCALE.md §6): drops every session-scoped
@@ -18,6 +19,17 @@ class CacheLifecycleSpec extends SparkSpec {
   private val dir = TestSession.sfDir
 
   private def query(name: String) = SparkEntry.all.find(_.name == name).get
+
+  /** Ids of RDDs currently holding cached partitions. */
+  private def cachedIds: Set[Int] =
+    spark.sparkContext.getRDDStorageInfo
+      .filter(_.numCachedPartitions > 0).map(_.id).toSet
+
+  /** Id of the RDD behind a memo staged as a checkpoint leaf. */
+  private def leafRdd(df: DataFrame): Int = df.queryExecution.logical match {
+    case l: LogicalRDD => l.rdd.id
+    case other => fail(s"memo is not a checkpoint leaf: ${other.nodeName}")
+  }
 
   test("clearCaches unpersists memoized frames; consumers rebuild and agree") {
     Graft.clearCaches(spark)
@@ -34,17 +46,17 @@ class CacheLifecycleSpec extends SparkSpec {
     val before = operators.Curation.coPurchaseEdges(spark, dir)
     // memoized: same instance on re-request
     assert(operators.Curation.coPurchaseEdges(spark, dir) eq before)
-    assert(before.storageLevel != StorageLevel.NONE)
+    assert(cachedIds.contains(leafRdd(before)))
 
     Graft.clearCaches(spark)
     assert(SessionCache.entries(spark) == 0, "clearCaches left memoized values behind")
 
     // the old frame no longer occupies storage, and the memo is gone —
-    // the next consumer rebuilds (new instance) and re-persists
-    assert(before.storageLevel == StorageLevel.NONE)
+    // the next consumer rebuilds (new instance) and stages new blocks
+    assert(!cachedIds.contains(leafRdd(before)))
     val after = operators.Curation.coPurchaseEdges(spark, dir)
     assert(!(after eq before))
-    assert(after.storageLevel != StorageLevel.NONE)
+    assert(leafRdd(after) != leafRdd(before) && cachedIds.contains(leafRdd(after)))
 
     // correctness is cache-invariant: q130 agrees before/after the drop
     val r2 = q130.run(spark, dir).collect().map(_.toString).sorted

@@ -79,6 +79,24 @@ class PlanGuardSpec extends SparkSpec {
       s"expected cached fast + exact subtrees in q34's plan, found ${mems.size}")
   }
 
+  test("graph-family plans read the co-purchase memos as flat leaves") {
+    // The five co-purchase memos (edges, degrees, orientation, adjacency,
+    // src-staged edges) are cache-scoped checkpoints, each built over
+    // the one before it. Staged with `.persist` instead, every consumer's
+    // plan embeds the cached plans of all of them (27 InMemoryTableScan
+    // nodes in q130's plan here, 236 in its executed plan at sf0.01).
+    // A checkpoint leaf holds none, so any InMemoryTableScan here is a
+    // re-nested memo.
+    val offenders = Seq("q130_triangle_count", "q131_pagerank",
+        "q223_link_prediction", "q251_degree_powerlaw").flatMap { n =>
+      val plan = SparkEntry.all.find(_.name == n).get
+        .run(spark, sfDir).queryExecution.executedPlan.toString
+      val scans = "InMemoryTableScan".r.findAllIn(plan).size
+      if (scans > 0) Some(s"$n ($scans)") else None
+    }
+    assert(offenders.isEmpty, s"cached relations nested in graph plans: $offenders")
+  }
+
   test("q79 centroid assignment is scan-side: one hash shuffle, no per-vector aggregate") {
     // the assignment must ride the scan (broadcast codebook array +
     // array_min argmin), so the only hash-partitioned exchange left is

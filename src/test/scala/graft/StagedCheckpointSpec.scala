@@ -14,7 +14,8 @@ import org.apache.spark.sql.functions.col
   *    what turns that degradation red;
   *  - release actually evicts the storage blocks (not just the refs);
   *  - cache-scoped checkpoints (embedded under SessionCache entries)
-  *    survive the per-rep release and die with clearCaches;
+  *    survive the per-rep release and die with clearCaches, and keep
+  *    the partitioning they were staged with;
   *  - Graft.iterate frees each dead round eagerly, keeping at most the
   *    last round's blocks alive (clusterLabels' converged frame, or the
   *    last round of a loop that fails loudly at its round cap);
@@ -72,6 +73,28 @@ class StagedCheckpointSpec extends SparkSpec {
     val after = cachedIds
     assert(staged.forall(id => !after.contains(id)),
       s"cache-scoped blocks survived clearCaches: ${staged.intersect(after)}")
+  }
+
+  test("cacheScopedCheckpoint keeps the partitioning the frame was staged with") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    Graft.clearCaches(spark)
+    val leaf = Graft.cacheScopedCheckpoint(
+      spark.range(0, 10000).select((col("id") % 500).as("k")).repartition(8, col("k")))
+    leaf.queryExecution.executedPlan.outputPartitioning match {
+      case h: HashPartitioning =>
+        assert(h.numPartitions == 8 && h.references.map(_.name).toSet == Set("k"))
+      case other => fail(s"staged leaf lost its hash partitioning: $other")
+    }
+    // a shuffled hash join on the key moves only the other side
+    val j = leaf.join(spark.range(0, 500).toDF("k").hint("shuffle_hash"), "k")
+    assert(j.collect().length == 10000)
+    val finalPlan = j.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan.toString
+      case p => p.toString
+    }
+    assert("Exchange hashpartitioning".r.findAllIn(finalPlan).size == 1, finalPlan)
+    Graft.clearCaches(spark)
   }
 
   test("clusterLabels frees dead per-round frames eagerly") {
